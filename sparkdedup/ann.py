@@ -16,7 +16,7 @@ embedding column (array<float>):
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import List, Optional
 
 import numpy as np
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
-from sparkdedup.cc import connected_components
+from sparkdedup.cc import DedupResult, cluster_keep, connected_components
 from sparkdedup.config import ANNConfig
 
 # cap on the per-block (queries x cell) sims matrix inside the cogrouped
@@ -56,22 +56,6 @@ _CONTRACT_MIN_COMPONENT = 8
 # doubling toward each dense cluster's size one full-corpus job at a
 # time.
 _EXHAUSTIVE_TAIL_QUERIES = 64
-
-
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float/double> columns (JVM-side).
-
-    Interpreted higher-order expression — fine for a handful of pairs;
-    hot paths (ivf_search scoring, near-dup verification) use the
-    Arrow-batched ``pair_dot`` UDF instead."""
-    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
 
 
 def _stack(vs: pd.Series) -> np.ndarray:
@@ -705,13 +689,6 @@ class ANNDedupMetrics:
     contractions: int = 0
 
 
-@dataclass
-class ANNDedupResult:
-    kept: DataFrame
-    assignment: DataFrame
-    metrics: ANNDedupMetrics
-
-
 def ann_match_edges(
     vectors: DataFrame,
     dim: int,
@@ -896,7 +873,7 @@ def ann_dedup(
     n_probe: Optional[int] = None,
     k0: int = 20,
     collect_metrics: bool = True,
-) -> ANNDedupResult:
+) -> DedupResult:
     """Embedding near-dup DEDUP: all >= threshold matches -> connected
     components -> keep the min-id representative per cluster.
 
@@ -913,47 +890,14 @@ def ann_dedup(
     IVF index built ONCE; each round touches only still-saturated docs,
     so the k-doubling loop converges in O(log max_cluster) rounds.
     """
-    from sparkdedup.cc import connected_components
-
-    idc = cfg.id_column
     metrics = ANNDedupMetrics()
     if collect_metrics:
         metrics.rows_before = vectors.count()
 
     edges = ann_match_edges(vectors, dim, cfg, exact, n_centroids, n_probe, k0, metrics)
-
-    from pyspark import StorageLevel
-
+    kept, assignment, cc = cluster_keep(vectors, edges, cfg.id_column, collect_metrics)
+    metrics.cc_iterations = cc.iterations
     if collect_metrics:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        metrics.match_edges = edges.count()
-        no_edges = metrics.match_edges == 0
-    else:
-        # fast path: no isEmpty probe — connected_components' driver
-        # path collects the edge list in one job and reports n_edges
-        no_edges = False
-
-    if not no_edges:
-        assignment, cc_stats = connected_components(edges)
-        metrics.cc_iterations = cc_stats.iterations
-        no_edges = cc_stats.n_edges == 0
-
-    if no_edges:
-        empty = vectors.sparkSession.createDataFrame([], "id long, component long")
-        if collect_metrics:
-            edges.unpersist()
-        metrics.rows_after = metrics.rows_before
-        return ANNDedupResult(vectors, empty, metrics)
-    kept = (
-        vectors.join(
-            assignment.withColumnRenamed("id", idc).withColumnRenamed("component", "__component__"),
-            on=idc,
-            how="left",
-        )
-        .filter(F.col("__component__").isNull() | (F.col("__component__") == F.col(idc)))
-        .drop("__component__")
-    )
-    if collect_metrics:
-        metrics.rows_after = kept.count()
-        edges.unpersist()
-    return ANNDedupResult(kept, assignment, metrics)
+        metrics.match_edges = cc.n_edges
+        metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_before
+    return DedupResult(kept, assignment, metrics)

@@ -22,10 +22,13 @@ in the edge list, ``component`` = minimum vertex id of its component.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import List, Tuple
+from typing import Any, List, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+COMPONENT = "__component__"
 
 
 @dataclass
@@ -95,8 +98,6 @@ def connected_components(
     lvl = edges.storageLevel
     we_persisted = False
     if not (lvl.useMemory or lvl.useDisk):
-        from pyspark import StorageLevel
-
         edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
         we_persisted = True
 
@@ -156,13 +157,6 @@ def connected_components(
     return assign.select("id", F.col("comp").alias("component")), stats
 
 
-def _driver_cc(edges: DataFrame, src: str, dst: str, stats: CCStats):
-    """Single-pass union-find on the driver (small graphs)."""
-    pdf = edges.select(src, dst).toPandas()
-    stats.n_edges = len(pdf)
-    return _driver_cc_pdf(pdf, src, dst, stats, edges.sparkSession)
-
-
 def _driver_cc_pdf(pdf, src: str, dst: str, stats: CCStats, spark):
     """Union-find over an already-collected pandas edge list."""
     import pandas as pd
@@ -190,3 +184,71 @@ def _driver_cc_pdf(pdf, src: str, dst: str, stats: CCStats, spark):
     ids = sorted(set(pdf[src].tolist()) | set(pdf[dst].tolist()))
     out = pd.DataFrame({"id": ids, "component": [find(i) for i in ids]})
     return spark.createDataFrame(out, schema="id long, component long"), stats
+
+
+def keep_representatives(docs: DataFrame, assignment: DataFrame, id_col: str) -> DataFrame:
+    """Rows of ``docs`` outside every component, plus each component's
+    minimum-id row (the reference's ``index == cluster`` filter,
+    minhash_spark.py:524-528)."""
+    return (
+        docs.join(
+            assignment.withColumnRenamed("id", id_col).withColumnRenamed("component", COMPONENT),
+            on=id_col,
+            how="left",
+        )
+        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(id_col)))
+        .drop(COMPONENT)
+    )
+
+
+def cluster_keep(
+    docs: DataFrame, edges: DataFrame, id_col: str, collect_metrics: bool
+) -> Tuple[DataFrame, DataFrame, CCStats]:
+    """The near-dup tail every ``*_dedup`` shares: candidate edges ->
+    connected components -> keep each component's representative.
+
+    collect_metrics=True persists the edges so their count
+    (``CCStats.n_edges``) and the CC pass share one materialization.
+    Otherwise the edges stay lazy: the driver CC path consumes the
+    lineage in one collect job and reports ``n_edges`` itself, so the
+    empty-graph exit costs no extra probe. On an empty graph CC is
+    skipped (count known) or its result ignored, ``docs`` is returned
+    as is, and the assignment is an empty lineage-free frame (early
+    exit of minhash_spark.py:472-483).
+
+    Returns (kept rows, DataFrame[id, component], CCStats)."""
+    n_edges = None
+    if collect_metrics:
+        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+        n_edges = edges.count()
+    try:
+        if n_edges == 0:
+            stats = CCStats(mode="empty", n_edges=0)
+        else:
+            assignment, stats = connected_components(edges)
+            if n_edges is not None:
+                stats.n_edges = n_edges
+        if stats.n_edges == 0:
+            empty = docs.sparkSession.createDataFrame([], "id long, component long")
+            return docs, empty, stats
+        return keep_representatives(docs, assignment, id_col), assignment, stats
+    finally:
+        if collect_metrics:
+            edges.unpersist()
+
+
+@dataclass
+class DedupResult:
+    """Output of a near-dup ``*_dedup``."""
+
+    kept: DataFrame  # surviving rows (input schema)
+    assignment: DataFrame  # (id, component) for every edge-touched row
+    metrics: Any  # the mode's *Metrics dataclass
+    cached: List[DataFrame] = field(default_factory=list)
+
+    def release(self) -> None:
+        """Unpersist pipeline-cached DataFrames. Call once the outputs
+        are written/consumed; materializing them afterwards recomputes."""
+        for df in self.cached:
+            df.unpersist()
+        self.cached.clear()

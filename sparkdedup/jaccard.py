@@ -13,17 +13,14 @@ approximation) for exact precision on what remains.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import List
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from sparkdedup.cc import connected_components
+from sparkdedup.cc import DedupResult
 from sparkdedup.config import MinHashConfig
 from sparkdedup.io import DOC_ID
-from sparkdedup.minhash import SIG, band_edges, make_signature_udf
+from sparkdedup.minhash import _signature_dedup, minhash_edges
 
 
 def shingle_array(c: Column, n: int) -> Column:
@@ -49,35 +46,18 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union == 0, lit(1.0)).otherwise(inter.cast("double") / union)
 
 
-@dataclass
-class JaccardResult:
-    kept: DataFrame
-    assignment: DataFrame
-    verified_edges: int
-    cached: List[DataFrame] = field(default_factory=list)
-
-    def release(self) -> None:
-        """Unpersist pipeline-cached DataFrames. Call once the outputs
-        are written/consumed; materializing them afterwards recomputes."""
-        for df in self.cached:
-            df.unpersist()
-        self.cached.clear()
-
-
 def jaccard_verified_edges(
     kept_docs: DataFrame, cfg: MinHashConfig, id_col: str = DOC_ID
 ) -> DataFrame:
     """(src, dst) LSH candidate star edges surviving the exact-Jaccard
     verification join. ``kept_docs`` carries the text column and a
     non-null SIG column; the staged jaccard_job checkpoints this frame."""
-    bands = kept_docs.select(col(id_col), F.posexplode(SIG).alias("band", "hash"))
-    cand = band_edges(bands, id_col)
+    cand = minhash_edges(kept_docs, id_col)
     # hash each shingle to a long BEFORE the verification joins: the
     # shingle arrays are this pipeline's heaviest shuffle payload
     # (~30 B/string vs 8 B/long per shingle, both join sides), and
-    # array_intersect over longs beats string comparisons. Jaccard over
-    # hashed sets equals the string-set value barring an in-doc 64-bit
-    # collision (~|s|^2/2^64 per doc — negligible; the same documented
+    # array_intersect over longs beats string comparisons. The price is
+    # the collision bound stated in jaccard_dedup's docstring (the same
     # move as the entry's exact-truth CTE, __spark_entry__._jaccard_truth).
     shingles = kept_docs.select(
         col(id_col),
@@ -98,49 +78,19 @@ def jaccard_dedup(
     cfg: MinHashConfig = MinHashConfig(),
     id_col: str = DOC_ID,
     collect_metrics: bool = True,
-) -> JaccardResult:
+) -> DedupResult:
     """MinHash-LSH candidates + exact word-n-gram Jaccard verification.
 
     Keeps the min-id representative of each verified component. Docs
-    below min_length are dropped (same as minhash_dedup).
+    below min_length are dropped (same as minhash_dedup). The metrics
+    are a MinHashMetrics whose ``candidate_edges`` counts the VERIFIED
+    edges.
+
+    Verification runs on xxhash64-hashed shingles: the measured Jaccard
+    of a pair differs from the string-set value only if two distinct
+    shingles of the pair share a 64-bit hash, probability ≈ |s|²/2⁶⁴
+    per document for |s| distinct shingles (~5e-12 at 10k shingles).
     """
-    from pyspark import StorageLevel
-
-    from sparkdedup.io import ensure_parallelism
-
-    sig_udf = make_signature_udf(cfg)
-    df = ensure_parallelism(df)
-    with_sig = df.withColumn(SIG, sig_udf(col(cfg.column))).persist(StorageLevel.MEMORY_AND_DISK)
-    kept_docs = with_sig.filter(col(SIG).isNotNull())
-
-    verified = jaccard_verified_edges(kept_docs, cfg, id_col)
-    if collect_metrics:
-        verified = verified.persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = verified.count()
-        if n_edges == 0:
-            empty = df.sparkSession.createDataFrame([], "id long, component long")
-            verified.unpersist()
-            return JaccardResult(kept_docs.drop(SIG), empty, 0, cached=[with_sig])
-    else:
-        # fast path: no isEmpty probe — connected_components' driver
-        # path collects the edge list in one job and reports n_edges
-        n_edges = -1
-
-    assignment, cc_stats = connected_components(verified)
-    if n_edges < 0:
-        n_edges = cc_stats.n_edges if cc_stats.n_edges is not None else -1
-    if n_edges == 0:
-        empty = df.sparkSession.createDataFrame([], "id long, component long")
-        return JaccardResult(kept_docs.drop(SIG), empty, 0, cached=[with_sig])
-    kept = (
-        kept_docs.join(
-            assignment.withColumnRenamed("id", id_col).withColumnRenamed("component", "__component__"),
-            on=id_col,
-            how="left",
-        )
-        .filter(col("__component__").isNull() | (col("__component__") == col(id_col)))
-        .drop("__component__", SIG)
+    return _signature_dedup(
+        df, cfg, id_col, collect_metrics, lambda s: jaccard_verified_edges(s, cfg, id_col)
     )
-    if collect_metrics:
-        verified.unpersist()
-    return JaccardResult(kept, assignment, n_edges, cached=[with_sig])

@@ -19,14 +19,14 @@ Architecture (Spark-first, NOT a port):
     build; singleton band groups (the overwhelming majority) are pruned
     by ``count > 1`` BEFORE the join, so AQE can broadcast the
     collision table when it is small and skew-split the join when not.
-  * clustering: checkpointed label propagation (sparkdedup.cc), no
-    GraphFrames.
+  * clustering + keep: the shared cc.cluster_keep tail (checkpointed
+    label propagation or driver union-find, no GraphFrames).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional
+from typing import Callable, Dict, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -36,8 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BinaryType
 
-from sparkdedup.cc import connected_components
-from sparkdedup.config import MAX_HASH_32, MOD_PRIME_32, MinHashConfig
+from sparkdedup.cc import COMPONENT, DedupResult, cluster_keep  # noqa: F401 (COMPONENT re-exported)
+from sparkdedup.config import MinHashConfig
 from sparkdedup.hashing import generate_permutations
 from sparkdedup.io import DOC_ID
 from sparkdedup.shingle import word_shingle_hashes_batch
@@ -61,7 +61,6 @@ _HASH_CONFIG = {
 _PERMUTE_CHUNK = 1_024
 
 SIG = "__sig__"
-COMPONENT = "__component__"
 
 
 @dataclass
@@ -243,28 +242,57 @@ def band_edges(bands: DataFrame, id_col: str = DOC_ID) -> DataFrame:
     )
 
 
-@dataclass
-class MinHashResult:
-    kept: DataFrame  # surviving rows (original schema + __id__)
-    assignment: DataFrame  # (id, component) for every edge-touched doc
-    metrics: MinHashMetrics
-    cached: List[DataFrame] = field(default_factory=list)
+def minhash_edges(sigs: DataFrame, id_col: str = DOC_ID) -> DataFrame:
+    """MinHash's one edge builder: ``sigs`` carries ``id_col`` and a
+    non-null SIG column; its band signatures are exploded and grouped
+    into star edges (band_edges)."""
+    return band_edges(sigs.select(F.col(id_col), F.posexplode(SIG).alias("band", "hash")), id_col)
 
-    def release(self) -> None:
-        """Unpersist pipeline-cached DataFrames. Call once the outputs
-        are written/consumed; materializing them afterwards recomputes."""
-        for df in self.cached:
-            df.unpersist()
-        self.cached.clear()
+
+def _signature_dedup(
+    df: DataFrame,
+    cfg: MinHashConfig,
+    id_col: str,
+    collect_metrics: bool,
+    edges_of: Callable[[DataFrame], DataFrame],
+) -> DedupResult:
+    """Signatures -> length filter -> ``edges_of(kept docs)`` -> the
+    shared cluster-and-keep tail; minhash_dedup and jaccard_dedup differ
+    only in ``edges_of``."""
+    import time
+
+    from sparkdedup.io import ensure_parallelism
+
+    metrics = MinHashMetrics()
+    t0 = time.time()
+    df = ensure_parallelism(df)
+    with_sig = df.withColumn(SIG, make_signature_udf(cfg)(F.col(cfg.column))).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    kept_docs = with_sig.filter(F.col(SIG).isNotNull())
+    if collect_metrics:
+        metrics.rows_before = df.count()
+        metrics.rows_kept_len_filter = kept_docs.count()
+    metrics.stage_seconds["signatures"] = time.time() - t0
+
+    t1 = time.time()
+    kept, assignment, cc = cluster_keep(
+        kept_docs.drop(SIG), edges_of(kept_docs), id_col, collect_metrics
+    )
+    metrics.cc_iterations = cc.iterations
+    if collect_metrics:
+        metrics.candidate_edges = cc.n_edges
+        metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_kept_len_filter
+    metrics.stage_seconds["cluster_keep"] = time.time() - t1
+    return DedupResult(kept, assignment, metrics, cached=[with_sig])
 
 
 def minhash_dedup(
     df: DataFrame,
     cfg: MinHashConfig = MinHashConfig(),
     id_col: str = DOC_ID,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     collect_metrics: bool = True,
-) -> MinHashResult:
+) -> DedupResult:
     """End-to-end MinHash-LSH dedup.
 
     ``df`` must already carry a stable long id column (``io.with_doc_id``
@@ -273,92 +301,7 @@ def minhash_dedup(
     row survives (minhash_spark.py:423-428, 524-528).
 
     collect_metrics=False skips the stage-count actions (each is a full
-    pass) — the fast path for production/bench runs; no isEmpty probe
-    either: the edge list flows straight into connected_components,
-    whose driver path collects it in ONE job and reports the exact edge
-    count back (CCStats.n_edges), so the empty-graph early exit costs
-    nothing extra.
+    pass) — the fast path for production/bench runs (see
+    cc.cluster_keep for how the empty-graph exit stays free there).
     """
-    import time
-
-    from sparkdedup.io import ensure_parallelism
-
-    metrics = MinHashMetrics()
-    t0 = time.time()
-
-    df = ensure_parallelism(df)
-    with_sig = df.withColumn(SIG, make_signature_udf(cfg)(F.col(cfg.column)))
-    # storage_level=None: recompute signatures per consumer instead of
-    # caching — wins when the cached (text + signatures) working set
-    # would spill to disk (cache serialization + spill I/O + GC can cost
-    # more than one extra CPU pass at high core counts).
-    # SHARPER CONTRACT on this path: ``df``'s lineage must be
-    # deterministic end-to-end (a real scan/table plus a stable id
-    # column). An UNPERSISTED monotonically_increasing_id lineage is
-    # corrupting here: the edge pass and the kept join would each
-    # recompute ids independently and can disagree. Callers that
-    # synthesize ids MUST materialize them (pipeline._stage_ids writes
-    # an ids parquet) before choosing storage_level=None.
-    if storage_level is not None:
-        with_sig = with_sig.persist(storage_level)
-    kept_docs = with_sig.filter(F.col(SIG).isNotNull())
-    if collect_metrics:
-        metrics.rows_before = df.count()
-        metrics.rows_kept_len_filter = kept_docs.count()
-    metrics.stage_seconds["signatures"] = time.time() - t0
-
-    t1 = time.time()
-    bands = kept_docs.select(F.col(id_col), F.posexplode(SIG).alias("band", "hash"))
-    edges = band_edges(bands, id_col)
-    if collect_metrics:
-        # metrics need an explicit edge count; persist so the count and
-        # the CC pass share one materialization
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        metrics.candidate_edges = edges.count()
-        no_edges = metrics.candidate_edges == 0
-    else:
-        # fast path: edges stay lazy — connected_components' driver
-        # path consumes the lineage exactly once (single collect job)
-        # and reports n_edges, covering the empty-graph check for free
-        no_edges = False
-    metrics.stage_seconds["edges"] = time.time() - t1
-
-    t2 = time.time()
-    if not no_edges:
-        assignment, cc_stats = connected_components(edges)
-        metrics.cc_iterations = cc_stats.iterations
-        no_edges = cc_stats.n_edges == 0
-
-    if no_edges:
-        # early exit mirrors minhash_spark.py:472-483; the empty
-        # assignment is built lineage-free so edges can be unpersisted
-        empty_assign = df.sparkSession.createDataFrame([], "id long, component long")
-        if collect_metrics:
-            edges.unpersist()
-        result = kept_docs.drop(SIG)
-        metrics.rows_after = metrics.rows_kept_len_filter
-        metrics.stage_seconds["cc"] = time.time() - t2
-        return MinHashResult(
-            result, empty_assign, metrics,
-            cached=[with_sig] if storage_level is not None else [],
-        )
-    metrics.stage_seconds["cc"] = time.time() - t2
-
-    t3 = time.time()
-    kept = (
-        kept_docs.join(
-            assignment.withColumnRenamed("id", id_col).withColumnRenamed("component", COMPONENT),
-            on=id_col,
-            how="left",
-        )
-        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(id_col)))
-        .drop(COMPONENT, SIG)
-    )
-    if collect_metrics:
-        metrics.rows_after = kept.count()
-        edges.unpersist()
-    metrics.stage_seconds["filter"] = time.time() - t3
-    return MinHashResult(
-        kept, assignment, metrics,
-        cached=[with_sig] if storage_level is not None else [],
-    )
+    return _signature_dedup(df, cfg, id_col, collect_metrics, lambda s: minhash_edges(s, id_col))

@@ -3,16 +3,22 @@
 North-rule requirements (BASELINE.json): resumable from checkpoint with
 per-partition lineage + metrics. Design:
 
-  * every expensive intermediate (ids+signatures implicit via
-    deterministic recompute, candidate EDGES, the CC ASSIGNMENT) is
-    materialized as parquet under ``work_dir`` with Spark's atomic
-    _SUCCESS markers;
-  * on restart the driver scans work_dir and resumes AFTER the last
-    complete stage — a killed CC run restarts from the saved edges, a
-    killed write restarts from the saved assignment; nothing re-reads
-    the raw corpus except the final join;
-  * per-stage wall times + row counts + per-partition output row
-    counts are written as one metrics JSON artifact.
+  * every job is its mode's edge builder (or corpus-wide aggregation)
+    cut at materialized stage boundaries by ``_stage``: the stable ids,
+    the fingerprints / encoded vectors, the candidate EDGES, the CC
+    ASSIGNMENT, the substring dup-keys and the ccnet line-firsts table
+    are each written as parquet under ``work_dir`` with Spark's atomic
+    _SUCCESS marker;
+  * on restart ``_stage`` resumes every stage whose marker exists and
+    rebuilds the rest, so all six jobs (minhash, simhash, jaccard, ann,
+    substring, ccnet) restart AFTER their last complete stage — a
+    killed CC run restarts from the saved edges, a killed write from
+    the saved assignment; nothing re-reads the raw corpus except the
+    final join;
+  * the four near-dup jobs share one tail: CC over the staged edges,
+    then cc.keep_representatives, then the partitioned write;
+  * per-stage wall times, resume flags and row counts + per-partition
+    output row counts are written as one metrics JSON artifact.
 
 The CC loop itself additionally localCheckpoints every round
 (sparkdedup.cc), bounding recomputation within the stage.
@@ -25,15 +31,16 @@ import os
 import sys
 import time
 from dataclasses import asdict, dataclass, field
-from typing import Dict, Optional
+from typing import Callable, Dict, Optional, Sequence, Tuple
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkdedup.cc import connected_components
+from sparkdedup.cc import connected_components, keep_representatives
 from sparkdedup.config import CCNetConfig, MinHashConfig, SimHashConfig, SubstringConfig
-from sparkdedup.io import DOC_ID, partitioned_save, read_documents, with_doc_id
-from sparkdedup.minhash import COMPONENT, SIG, band_edges, make_signature_udf
+from sparkdedup.io import DOC_ID, ensure_parallelism, partitioned_save, read_documents, with_doc_id
+from sparkdedup.minhash import SIG, make_signature_udf, minhash_edges
 
 
 @dataclass
@@ -56,6 +63,32 @@ def _complete(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _stage(
+    spark: SparkSession,
+    m: RunMetrics,
+    name: str,
+    path: str,
+    build: Callable[[], DataFrame],
+    also: Sequence[str] = (),
+    count: Callable[[DataFrame], int] = DataFrame.count,
+) -> DataFrame:
+    """Resume-or-build one materialized stage.
+
+    The stage resumes when ``path`` and every side output in ``also``
+    (written by ``build`` itself) hold a _SUCCESS marker; otherwise
+    ``build()``'s frame is written to ``path``. Either way the parquet
+    is read back, counted with ``count`` and recorded as
+    ``m.stages[name]``."""
+    t = time.time()
+    resumed = all(_complete(p) for p in (path, *also))
+    if not resumed:
+        build().write.parquet(path, mode="overwrite")
+    m.stages[name] = StageInfo(time.time() - t, resumed=resumed)
+    df = spark.read.parquet(path)
+    m.stages[name].rows = count(df)
+    return df
+
+
 def sample_clusters(
     docs: DataFrame,
     assignment: DataFrame,
@@ -71,100 +104,6 @@ def sample_clusters(
     return docs.join(
         members.withColumnRenamed("id", id_col), on=id_col
     ).orderBy("component", id_col)
-
-
-def minhash_job(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    work_dir: str,
-    cfg: MinHashConfig = MinHashConfig(),
-    id_column: Optional[str] = None,
-    metrics_path: Optional[str] = None,
-) -> RunMetrics:
-    """Resumable MinHash-LSH dedup: input table -> deduped output table
-    + assignment artifact + metrics JSON."""
-    m = RunMetrics(mode="minhash")
-    os.makedirs(work_dir, exist_ok=True)
-    ids_path = os.path.join(work_dir, "ids.parquet")
-    edges_path = os.path.join(work_dir, "edges.parquet")
-    assign_path = os.path.join(work_dir, "assignment.parquet")
-
-    # --- stage: id assignment (materialized: monotonically_increasing_id
-    # is NOT stable across recomputation — reference persists for the
-    # same reason, minhash_spark.py:419-430)
-    t = time.time()
-    if _complete(ids_path):
-        ids_df = spark.read.parquet(ids_path)
-        m.stages["ids"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        from sparkdedup.io import ensure_parallelism
-
-        df = ensure_parallelism(read_documents(spark, input_path))
-        ids_df = with_doc_id(df, id_column)
-        ids_df.write.parquet(ids_path, mode="overwrite")
-        ids_df = spark.read.parquet(ids_path)
-        m.stages["ids"] = StageInfo(time.time() - t)
-    m.rows_before = _checked_count(ids_df, id_column)
-
-    # --- stage: signatures -> kept ids (length filter) + edges
-    t = time.time()
-    kept_ids_path = os.path.join(work_dir, "kept_ids.parquet")
-    if _complete(edges_path) and _complete(kept_ids_path):
-        edges = spark.read.parquet(edges_path)
-        m.stages["edges"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        from pyspark import StorageLevel
-
-        sig_udf = make_signature_udf(cfg)
-        with_sig = (
-            ids_df.select(F.col(DOC_ID), sig_udf(F.col(cfg.column)).alias(SIG))
-            .filter(F.col(SIG).isNotNull())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        with_sig.select(DOC_ID).write.parquet(kept_ids_path, mode="overwrite")
-        bands = with_sig.select(F.col(DOC_ID), F.posexplode(SIG).alias("band", "hash"))
-        band_edges(bands).write.parquet(edges_path, mode="overwrite")
-        with_sig.unpersist()
-        edges = spark.read.parquet(edges_path)
-        m.stages["edges"] = StageInfo(time.time() - t)
-    m.stages["edges"].rows = edges.count()
-
-    # --- stage: connected components
-    t = time.time()
-    if _complete(assign_path):
-        assignment = spark.read.parquet(assign_path)
-        m.stages["cc"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        assignment, _ = connected_components(edges)
-        assignment.write.parquet(assign_path, mode="overwrite")
-        assignment = spark.read.parquet(assign_path)
-        m.stages["cc"] = StageInfo(time.time() - t)
-    m.stages["cc"].rows = assignment.count()
-
-    # --- stage: length filter (precomputed ids) + representative filter + write
-    t = time.time()
-    kept_ids = spark.read.parquet(kept_ids_path)
-    kept = (
-        ids_df.join(kept_ids, on=DOC_ID, how="leftsemi")
-        .join(
-            assignment.withColumnRenamed("id", DOC_ID).withColumnRenamed("component", COMPONENT),
-            on=DOC_ID,
-            how="left",
-        )
-        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(DOC_ID)))
-        .drop(COMPONENT)
-    )
-    partitioned_save(kept, output_path)
-    m.stages["write"] = StageInfo(time.time() - t)
-
-    out = spark.read.parquet(output_path)
-    m.rows_after = out.count()
-    pid_rows = out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    m.partition_rows = {str(r["pid"]): r["count"] for r in pid_rows}
-
-    _write_metrics(m, metrics_path)
-    return m
 
 
 def _write_metrics(m: RunMetrics, metrics_path: Optional[str]) -> None:
@@ -188,19 +127,16 @@ def _stage_ids(
     spark: SparkSession, input_path: str, work_dir: str, id_column: Optional[str], m: RunMetrics
 ) -> DataFrame:
     """Shared first stage: materialized stable ids (mii is not stable
-    across recomputation — must be staged before anything joins on it)."""
-    ids_path = os.path.join(work_dir, "ids.parquet")
-    t = time.time()
-    if _complete(ids_path):
-        m.stages["ids"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        from sparkdedup.io import ensure_parallelism
-
-        df = ensure_parallelism(read_documents(spark, input_path))
-        with_doc_id(df, id_column).write.parquet(ids_path, mode="overwrite")
-        m.stages["ids"] = StageInfo(time.time() - t)
-    ids_df = spark.read.parquet(ids_path)
-    m.rows_before = _checked_count(ids_df, id_column)
+    across recomputation — reference persists for the same reason,
+    minhash_spark.py:419-430 — so ids must be staged before anything
+    joins on them)."""
+    os.makedirs(work_dir, exist_ok=True)
+    ids_df = _stage(
+        spark, m, "ids", os.path.join(work_dir, "ids.parquet"),
+        lambda: with_doc_id(ensure_parallelism(read_documents(spark, input_path)), id_column),
+        count=lambda df: _checked_count(df, id_column),
+    )
+    m.rows_before = m.stages["ids"].rows
     return ids_df
 
 
@@ -232,6 +168,58 @@ def _checked_count(ids_df: DataFrame, id_column: Optional[str]) -> int:
     return int(stats["n"])
 
 
+def _signature_edges(
+    spark: SparkSession,
+    m: RunMetrics,
+    work_dir: str,
+    ids_df: DataFrame,
+    cfg: MinHashConfig,
+    edges_of: Callable[[DataFrame], DataFrame],
+    *cols: str,
+) -> Tuple[DataFrame, DataFrame]:
+    """The minhash/jaccard "edges" stage: signatures -> kept ids (the
+    length filter, a side output) + ``edges_of(signed docs)``. It
+    resumes only when both outputs are complete. Returns (length-
+    filtered ids_df, edges)."""
+    kept_ids_path = os.path.join(work_dir, "kept_ids.parquet")
+    with_sig = ids_df.select(
+        F.col(DOC_ID), *cols, make_signature_udf(cfg)(F.col(cfg.column)).alias(SIG)
+    ).filter(F.col(SIG).isNotNull())
+
+    def build() -> DataFrame:
+        with_sig.persist(StorageLevel.MEMORY_AND_DISK)
+        with_sig.select(DOC_ID).write.parquet(kept_ids_path, mode="overwrite")
+        return edges_of(with_sig)
+
+    edges = _stage(
+        spark, m, "edges", os.path.join(work_dir, "edges.parquet"), build, also=[kept_ids_path]
+    )
+    with_sig.unpersist()
+    kept_ids = spark.read.parquet(kept_ids_path)
+    return ids_df.join(kept_ids, on=DOC_ID, how="leftsemi"), edges
+
+
+def _cluster_write(
+    spark: SparkSession,
+    m: RunMetrics,
+    work_dir: str,
+    docs: DataFrame,
+    edges: DataFrame,
+    id_col: str,
+    output_path: str,
+    metrics_path: Optional[str],
+) -> RunMetrics:
+    """The near-dup jobs' tail: staged CC assignment -> keep each
+    component's representative -> write."""
+    assignment = _stage(
+        spark, m, "cc", os.path.join(work_dir, "assignment.parquet"),
+        lambda: connected_components(edges)[0],
+    )
+    t = time.time()
+    kept = keep_representatives(docs, assignment, id_col)
+    return _finalize(spark, kept, output_path, m, metrics_path, t)
+
+
 def _finalize(
     spark: SparkSession, kept: DataFrame, output_path: str, m: RunMetrics,
     metrics_path: Optional[str], t: float,
@@ -244,6 +232,24 @@ def _finalize(
     m.partition_rows = {str(r["pid"]): r["count"] for r in pid_rows}
     _write_metrics(m, metrics_path)
     return m
+
+
+def minhash_job(
+    spark: SparkSession,
+    input_path: str,
+    output_path: str,
+    work_dir: str,
+    cfg: MinHashConfig = MinHashConfig(),
+    id_column: Optional[str] = None,
+    metrics_path: Optional[str] = None,
+) -> RunMetrics:
+    """Resumable MinHash-LSH dedup: ids -> (kept ids + edges) ->
+    assignment -> representative write, plus the assignment artifact
+    and a metrics JSON."""
+    m = RunMetrics(mode="minhash")
+    ids_df = _stage_ids(spark, input_path, work_dir, id_column, m)
+    docs, edges = _signature_edges(spark, m, work_dir, ids_df, cfg, minhash_edges)
+    return _cluster_write(spark, m, work_dir, docs, edges, DOC_ID, output_path, metrics_path)
 
 
 def simhash_job(
@@ -261,57 +267,17 @@ def simhash_job(
     from sparkdedup.simhash import FP, _fp_not_null, make_fingerprint_udf, simhash_edges
 
     m = RunMetrics(mode="simhash")
-    os.makedirs(work_dir, exist_ok=True)
-    fps_path = os.path.join(work_dir, "fps.parquet")
-    edges_path = os.path.join(work_dir, "edges.parquet")
-    assign_path = os.path.join(work_dir, "assignment.parquet")
-
     ids_df = _stage_ids(spark, input_path, work_dir, id_column, m)
-
-    t = time.time()
-    if _complete(fps_path):
-        m.stages["fps"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        fp_udf = make_fingerprint_udf(cfg)
-        (
-            ids_df.select(F.col(DOC_ID), fp_udf(F.col(cfg.column)).alias(FP))
-            .filter(_fp_not_null(cfg))
-            .write.parquet(fps_path, mode="overwrite")
-        )
-        m.stages["fps"] = StageInfo(time.time() - t)
-    fps = spark.read.parquet(fps_path)
-    m.stages["fps"].rows = fps.count()
-
-    t = time.time()
-    if _complete(edges_path):
-        m.stages["edges"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        simhash_edges(fps, cfg, DOC_ID).write.parquet(edges_path, mode="overwrite")
-        m.stages["edges"] = StageInfo(time.time() - t)
-    edges = spark.read.parquet(edges_path)
-    m.stages["edges"].rows = edges.count()
-
-    t = time.time()
-    if _complete(assign_path):
-        m.stages["cc"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        assignment, _ = connected_components(edges)
-        assignment.write.parquet(assign_path, mode="overwrite")
-        m.stages["cc"] = StageInfo(time.time() - t)
-    assignment = spark.read.parquet(assign_path)
-    m.stages["cc"].rows = assignment.count()
-
-    t = time.time()
-    kept = (
-        ids_df.join(
-            assignment.withColumnRenamed("id", DOC_ID).withColumnRenamed("component", COMPONENT),
-            on=DOC_ID,
-            how="left",
-        )
-        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(DOC_ID)))
-        .drop(COMPONENT)
+    fps = _stage(
+        spark, m, "fps", os.path.join(work_dir, "fps.parquet"),
+        lambda: ids_df.select(F.col(DOC_ID), make_fingerprint_udf(cfg)(F.col(cfg.column)).alias(FP))
+        .filter(_fp_not_null(cfg)),
     )
-    return _finalize(spark, kept, output_path, m, metrics_path, t)
+    edges = _stage(
+        spark, m, "edges", os.path.join(work_dir, "edges.parquet"),
+        lambda: simhash_edges(fps, cfg, DOC_ID),
+    )
+    return _cluster_write(spark, m, work_dir, ids_df, edges, DOC_ID, output_path, metrics_path)
 
 
 def substring_job(
@@ -329,20 +295,11 @@ def substring_job(
     from sparkdedup.suffix import _detect_dup_keys, apply_substring_splice
 
     m = RunMetrics(mode="substring")
-    os.makedirs(work_dir, exist_ok=True)
-    dup_path = os.path.join(work_dir, "dup_keys.parquet")
-
     ids_df = _stage_ids(spark, input_path, work_dir, id_column, m)
-
-    t = time.time()
-    if _complete(dup_path):
-        m.stages["dup_keys"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        _detect_dup_keys(ids_df, cfg).write.parquet(dup_path, mode="overwrite")
-        m.stages["dup_keys"] = StageInfo(time.time() - t)
-    dup_keys = spark.read.parquet(dup_path)
-    m.stages["dup_keys"].rows = dup_keys.count()
-
+    dup_keys = _stage(
+        spark, m, "dup_keys", os.path.join(work_dir, "dup_keys.parquet"),
+        lambda: _detect_dup_keys(ids_df, cfg),
+    )
     t = time.time()
     kept, _path = apply_substring_splice(
         ids_df, dup_keys, cfg, DOC_ID, n_dup=m.stages["dup_keys"].rows
@@ -364,59 +321,14 @@ def jaccard_job(
     minhash_job with the exact-Jaccard verification folded into the
     edges stage."""
     from sparkdedup.jaccard import jaccard_verified_edges
-    from sparkdedup.minhash import SIG, make_signature_udf
 
     m = RunMetrics(mode="jaccard")
-    os.makedirs(work_dir, exist_ok=True)
-    edges_path = os.path.join(work_dir, "edges.parquet")
-    kept_ids_path = os.path.join(work_dir, "kept_ids.parquet")
-    assign_path = os.path.join(work_dir, "assignment.parquet")
-
     ids_df = _stage_ids(spark, input_path, work_dir, id_column, m)
-
-    t = time.time()
-    if _complete(edges_path) and _complete(kept_ids_path):
-        m.stages["edges"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        from pyspark import StorageLevel
-
-        sig_udf = make_signature_udf(cfg)
-        with_sig = (
-            ids_df.select(F.col(DOC_ID), F.col(cfg.column), sig_udf(F.col(cfg.column)).alias(SIG))
-            .filter(F.col(SIG).isNotNull())
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        with_sig.select(DOC_ID).write.parquet(kept_ids_path, mode="overwrite")
-        jaccard_verified_edges(with_sig, cfg, DOC_ID).write.parquet(
-            edges_path, mode="overwrite"
-        )
-        with_sig.unpersist()
-        m.stages["edges"] = StageInfo(time.time() - t)
-    edges = spark.read.parquet(edges_path)
-    m.stages["edges"].rows = edges.count()
-
-    t = time.time()
-    if _complete(assign_path):
-        m.stages["cc"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        assignment, _ = connected_components(edges)
-        assignment.write.parquet(assign_path, mode="overwrite")
-        m.stages["cc"] = StageInfo(time.time() - t)
-    assignment = spark.read.parquet(assign_path)
-    m.stages["cc"].rows = assignment.count()
-
-    t = time.time()
-    kept = (
-        ids_df.join(spark.read.parquet(kept_ids_path), on=DOC_ID, how="leftsemi")
-        .join(
-            assignment.withColumnRenamed("id", DOC_ID).withColumnRenamed("component", COMPONENT),
-            on=DOC_ID,
-            how="left",
-        )
-        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(DOC_ID)))
-        .drop(COMPONENT)
+    docs, edges = _signature_edges(
+        spark, m, work_dir, ids_df, cfg,
+        lambda sigs: jaccard_verified_edges(sigs, cfg, DOC_ID), cfg.column,
     )
-    return _finalize(spark, kept, output_path, m, metrics_path, t)
+    return _cluster_write(spark, m, work_dir, docs, edges, DOC_ID, output_path, metrics_path)
 
 
 def ann_job(
@@ -460,25 +372,18 @@ def ann_job(
 
     m = RunMetrics(mode="ann")
     os.makedirs(work_dir, exist_ok=True)
-    edges_path = os.path.join(work_dir, "edges.parquet")
-    assign_path = os.path.join(work_dir, "assignment.parquet")
-
     if text_column is not None:
         from sparkdedup.encode import encode_documents
 
-        # the staged frame carries ALL doc columns + the embedding, so
-        # (a) a synthesized id is assigned exactly once (mii is not
-        # stable across re-reads) and (b) the final output is the
-        # surviving DOCUMENTS, as in the reference's ann_unisim mode.
-        # Docs with no shingles (below min_length) encode to NULL and
-        # are dropped, mirroring the signature pipelines' length filter.
-        vectors_path = os.path.join(work_dir, "vectors.parquet")
-        t = time.time()
-        if _complete(vectors_path):
-            m.stages["encode"] = StageInfo(time.time() - t, resumed=True)
-        else:
-            # "vec_id" is the VECTOR-table default — document tables
-            # don't have it; treat it as "synthesize" here
+        def encode() -> DataFrame:
+            # the staged frame carries ALL doc columns + the embedding,
+            # so (a) a synthesized id is assigned exactly once (mii is
+            # not stable across re-reads) and (b) the final output is
+            # the surviving DOCUMENTS, as in the reference's ann_unisim
+            # mode. Docs with no shingles (below min_length) encode to
+            # NULL and are dropped, mirroring the signature pipelines'
+            # length filter. "vec_id" is the VECTOR-table default —
+            # document tables don't have it; treat it as "synthesize".
             doc_id_col = None if id_column in (None, "vec_id") else id_column
             raw_docs = read_documents(spark, input_path)
             if doc_id_col is None and "vec_id" in raw_docs.columns:
@@ -491,18 +396,14 @@ def ann_job(
                     "Pass a different --id_column name to key on a real column.",
                     file=sys.stderr,
                 )
-            docs = with_doc_id(raw_docs, doc_id_col)
             encoded = encode_documents(
-                docs, column=text_column, output_column=vector_column,
-                dim=encode_dim, ngram=encode_ngram,
+                with_doc_id(raw_docs, doc_id_col), column=text_column,
+                output_column=vector_column, dim=encode_dim, ngram=encode_ngram,
             ).filter(F.col(vector_column).isNotNull())
-            encoded.withColumnRenamed(DOC_ID, "vec_id").write.parquet(
-                vectors_path, mode="overwrite"
-            )
-            m.stages["encode"] = StageInfo(time.time() - t)
+            return encoded.withColumnRenamed(DOC_ID, "vec_id")
+
+        vectors = _stage(spark, m, "encode", os.path.join(work_dir, "vectors.parquet"), encode)
         id_column = "vec_id"
-        vectors = spark.read.parquet(vectors_path)
-        m.stages["encode"].rows = vectors.count()
         m.rows_before = m.stages["encode"].rows
     else:
         vectors = read_documents(spark, input_path)
@@ -516,43 +417,15 @@ def ann_job(
         )
     dim = len(probe[0])
 
-    t = time.time()
-    if _complete(edges_path):
-        m.stages["edges"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        ann_match_edges(
-            vectors, dim, cfg, exact=False, n_centroids=n_centroids,
-            n_probe=n_probe, k0=k0,
-        ).write.parquet(edges_path, mode="overwrite")
-        m.stages["edges"] = StageInfo(time.time() - t)
-    edges = spark.read.parquet(edges_path)
-    m.stages["edges"].rows = edges.count()
-
-    t = time.time()
-    if _complete(assign_path):
-        m.stages["cc"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        assignment, _ = connected_components(edges)
-        assignment.write.parquet(assign_path, mode="overwrite")
-        m.stages["cc"] = StageInfo(time.time() - t)
-    assignment = spark.read.parquet(assign_path)
-    m.stages["cc"].rows = assignment.count()
-
-    t = time.time()
-    kept = (
-        vectors.join(
-            assignment.withColumnRenamed("id", id_column).withColumnRenamed(
-                "component", COMPONENT
-            ),
-            on=id_column,
-            how="left",
-        )
-        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(id_column)))
-        .drop(COMPONENT)
+    edges = _stage(
+        spark, m, "edges", os.path.join(work_dir, "edges.parquet"),
+        lambda: ann_match_edges(
+            vectors, dim, cfg, exact=False, n_centroids=n_centroids, n_probe=n_probe, k0=k0
+        ),
     )
-    if text_column is not None:
-        kept = kept.drop(vector_column)  # output = surviving documents
-    return _finalize(spark, kept, output_path, m, metrics_path, t)
+    # text mode outputs the surviving DOCUMENTS, without their embedding
+    docs = vectors.drop(vector_column) if text_column is not None else vectors
+    return _cluster_write(spark, m, work_dir, docs, edges, id_column, output_path, metrics_path)
 
 
 def ccnet_job(
@@ -569,20 +442,11 @@ def ccnet_job(
     from sparkdedup.exact import ccnet_line_firsts, ccnet_rebuild
 
     m = RunMetrics(mode="ccnet")
-    os.makedirs(work_dir, exist_ok=True)
-    firsts_path = os.path.join(work_dir, "line_firsts.parquet")
-
     ids_df = _stage_ids(spark, input_path, work_dir, id_column, m)
-
-    t = time.time()
-    if _complete(firsts_path):
-        m.stages["line_firsts"] = StageInfo(time.time() - t, resumed=True)
-    else:
-        ccnet_line_firsts(ids_df, cfg, DOC_ID).write.parquet(firsts_path, mode="overwrite")
-        m.stages["line_firsts"] = StageInfo(time.time() - t)
-    firsts = spark.read.parquet(firsts_path)
-    m.stages["line_firsts"].rows = firsts.count()
-
+    firsts = _stage(
+        spark, m, "line_firsts", os.path.join(work_dir, "line_firsts.parquet"),
+        lambda: ccnet_line_firsts(ids_df, cfg, DOC_ID),
+    )
     t = time.time()
     kept = ccnet_rebuild(ids_df, firsts, cfg, DOC_ID)
     return _finalize(spark, kept, output_path, m, metrics_path, t)

@@ -39,9 +39,9 @@ Spark-first design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from itertools import permutations as iter_permutations
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 import numpy as np
 import pandas as pd
@@ -51,13 +51,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import LongType, StructField, StructType
 
-from sparkdedup.cc import connected_components
+from sparkdedup.cc import DedupResult, cluster_keep
 from sparkdedup.config import SimHashConfig
 from sparkdedup.io import DOC_ID
 from sparkdedup.shingle import char_shingle_hashes64_batch, char_shingle_hashes128_batch
 
 FP = "__fp__"
-COMPONENT = "__component__"
 
 # shingles per bit-matrix slice: (S, f) uint8 at f=128 is 8 KB/shingle
 # row-group; 64k shingles ≈ 8 MB peak — L3-resident per worker.
@@ -324,21 +323,6 @@ class SimHashMetrics:
     rows_after: int = 0
 
 
-@dataclass
-class SimHashResult:
-    kept: DataFrame
-    assignment: DataFrame
-    metrics: SimHashMetrics
-    cached: List[DataFrame] = field(default_factory=list)
-
-    def release(self) -> None:
-        """Unpersist pipeline-cached DataFrames. Call once the outputs
-        are written/consumed; materializing them afterwards recomputes."""
-        for df in self.cached:
-            df.unpersist()
-        self.cached.clear()
-
-
 def _fp_cols(cfg: SimHashConfig) -> List[Column]:
     if cfg.f == 64:
         return [F.col(FP)]
@@ -458,55 +442,28 @@ def simhash_dedup(
     df: DataFrame,
     cfg: SimHashConfig = SimHashConfig(),
     id_col: str = DOC_ID,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     collect_metrics: bool = True,
-) -> SimHashResult:
+) -> DedupResult:
     """End-to-end SimHash dedup; min-id representative of each cluster
     survives (cluster==index filter, simhash.py:447-452). Docs too
     short to fingerprint are kept as unique."""
     from sparkdedup.io import ensure_parallelism
 
     metrics = SimHashMetrics()
-    fp_udf = make_fingerprint_udf(cfg)
     df = ensure_parallelism(df)
-    with_fp = df.withColumn(FP, fp_udf(F.col(cfg.column))).persist(storage_level)
+    with_fp = df.withColumn(FP, make_fingerprint_udf(cfg)(F.col(cfg.column))).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     fps = with_fp.filter(_fp_not_null(cfg)).select(F.col(id_col), FP)
     if collect_metrics:
         metrics.rows_before = df.count()
         metrics.rows_with_fp = fps.count()
 
-    edges = simhash_edges(fps, cfg, id_col)
-    if collect_metrics:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        metrics.candidate_edges = edges.count()
-        no_edges = metrics.candidate_edges == 0
-    else:
-        # fast path: no isEmpty probe — connected_components' driver
-        # path collects the edge list in one job and reports n_edges
-        no_edges = False
-
-    if not no_edges:
-        assignment, cc_stats = connected_components(edges)
-        metrics.cc_iterations = cc_stats.iterations
-        no_edges = cc_stats.n_edges == 0
-
-    if no_edges:
-        metrics.rows_after = metrics.rows_before
-        empty_assign = df.sparkSession.createDataFrame([], "id long, component long")
-        if collect_metrics:
-            edges.unpersist()
-        return SimHashResult(with_fp.drop(FP), empty_assign, metrics, cached=[with_fp])
-
-    kept = (
-        with_fp.join(
-            assignment.withColumnRenamed("id", id_col).withColumnRenamed("component", COMPONENT),
-            on=id_col,
-            how="left",
-        )
-        .filter(F.col(COMPONENT).isNull() | (F.col(COMPONENT) == F.col(id_col)))
-        .drop(COMPONENT, FP)
+    kept, assignment, cc = cluster_keep(
+        with_fp.drop(FP), simhash_edges(fps, cfg, id_col), id_col, collect_metrics
     )
+    metrics.cc_iterations = cc.iterations
     if collect_metrics:
-        metrics.rows_after = kept.count()
-        edges.unpersist()
-    return SimHashResult(kept, assignment, metrics, cached=[with_fp])
+        metrics.candidate_edges = cc.n_edges
+        metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_before
+    return DedupResult(kept, assignment, metrics, cached=[with_fp])

@@ -637,7 +637,6 @@ def substring_dedup(
     df: DataFrame,
     cfg: SubstringConfig = SubstringConfig(),
     id_col: str = DOC_ID,
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
     collect_metrics: bool = True,
 ) -> SubstringResult:
     """Remove every byte range (length >= k) whose content appears more
@@ -645,7 +644,7 @@ def substring_dedup(
     from sparkdedup.io import ensure_parallelism
 
     metrics = SubstringMetrics()
-    df = ensure_parallelism(df).persist(storage_level)
+    df = ensure_parallelism(df).persist(StorageLevel.MEMORY_AND_DISK)
     if collect_metrics:
         metrics.rows_before = df.count()
 

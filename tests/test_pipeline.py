@@ -289,3 +289,184 @@ def test_entry_release_all_unpersists(spark):
     assert all(
         not (f.storageLevel.useMemory or f.storageLevel.useDisk) for f in frames
     )
+
+
+# --- lazy *_dedup vs staged *_job drift, and the resume matrix ------------
+
+
+@pytest.fixture(scope="module")
+def nodup_corpus_path(tmp_path_factory):
+    """Docs of random letter-words (no shared shingles, so no near-dup
+    edges in any mode) plus three docs below MinHash's min_length."""
+    import random
+
+    import pandas as pd
+
+    rng = random.Random(7)
+    letters = "abcdefghijklmnopqrstuvwxyz"
+    rows = []
+    for i in range(120):
+        n_words = 2 if i % 40 == 0 else 60
+        words = ["".join(rng.choice(letters) for _ in range(rng.randint(3, 9))) for _ in range(n_words)]
+        rows.append((f"d{i:04d}", " ".join(words)))
+    p = str(tmp_path_factory.mktemp("nodup") / "docs.parquet")
+    pd.DataFrame(rows, columns=["doc_id", "content"]).to_parquet(p)
+    return p
+
+
+@pytest.fixture(scope="module")
+def nodup_embeddings_path(tmp_path_factory, spark):
+    import numpy as np
+
+    vecs = np.random.RandomState(5).standard_normal((80, 32))
+    unit = vecs / np.linalg.norm(vecs, axis=1, keepdims=True)
+    sims = unit @ unit.T
+    np.fill_diagonal(sims, 0.0)
+    assert sims.max() < 0.9  # fixture sanity: no pair at the threshold
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    p = str(tmp_path_factory.mktemp("nodup_emb") / "embeddings.parquet")
+    spark.createDataFrame(rows, "vec_id long, embedding array<double>").write.parquet(p)
+    return p
+
+
+def _ids(df, col):
+    return {r[col] for r in df.select(col).collect()}
+
+
+def _dedup_and_job(spark, mode, path, tmp_path):
+    """(kept ids of *_dedup(collect_metrics=True), of
+    *_dedup(collect_metrics=False), of the staged *_job; the two
+    dedups' assignment sizes; the job's staged assignment rows)."""
+    from sparkdedup.ann import ann_dedup
+    from sparkdedup.config import ANNConfig, SimHashConfig
+    from sparkdedup.io import with_doc_id
+    from sparkdedup.jaccard import jaccard_dedup
+    from sparkdedup.minhash import minhash_dedup
+    from sparkdedup.pipeline import ann_job, jaccard_job, simhash_job
+    from sparkdedup.simhash import simhash_dedup
+
+    out, work = str(tmp_path / f"{mode}_out"), str(tmp_path / f"{mode}_work")
+    if mode == "ann":
+        vectors = spark.read.parquet(path)
+        dim = len(vectors.first()["embedding"])
+        # n_probe == n_centroids: full probe, so the IVF run is exact
+        dedup = lambda cm: ann_dedup(  # noqa: E731
+            vectors, dim, ANNConfig(threshold=0.9), n_centroids=5, n_probe=5, collect_metrics=cm
+        )
+        m = ann_job(spark, path, out, work, threshold=0.9, n_centroids=5, n_probe=5)
+        col = "vec_id"
+    else:
+        cfg, dedup_fn, job = {
+            "minhash": (MinHashConfig(), minhash_dedup, minhash_job),
+            "simhash": (SimHashConfig(), simhash_dedup, simhash_job),
+            "jaccard": (MinHashConfig(threshold=0.7), jaccard_dedup, jaccard_job),
+        }[mode]
+        df = with_doc_id(spark.read.parquet(path), "doc_id")
+        dedup = lambda cm: dedup_fn(df, cfg, collect_metrics=cm)  # noqa: E731
+        m = job(spark, path, out, work, cfg, id_column="doc_id")
+        col = "doc_id"
+    kept, assigned = [], []
+    for cm in (True, False):
+        res = dedup(cm)
+        kept.append(_ids(res.kept, col))
+        assigned.append(res.assignment.count())
+        res.release()
+    return kept[0], kept[1], _ids(spark.read.parquet(out), col), assigned, m.stages["cc"].rows
+
+
+@pytest.mark.parametrize("mode", ["minhash", "simhash", "jaccard", "ann"])
+def test_dedup_and_job_keep_the_same_ids(spark, tmp_path, corpus_path, embeddings_path, mode):
+    path = embeddings_path if mode == "ann" else corpus_path
+    metered, fast, staged, assigned, _ = _dedup_and_job(spark, mode, path, tmp_path)
+    assert metered == fast == staged
+    assert 0 < len(staged) < (200 if mode == "ann" else 400)
+    assert min(assigned) > 0
+
+
+@pytest.mark.parametrize("mode", ["minhash", "simhash", "jaccard", "ann"])
+def test_dedup_and_job_without_near_dups_keep_every_eligible_row(
+    spark, tmp_path, nodup_corpus_path, nodup_embeddings_path, mode
+):
+    import pandas as pd
+
+    if mode == "ann":
+        path = nodup_embeddings_path
+        eligible = set(range(80))
+    else:
+        path = nodup_corpus_path
+        docs = pd.read_parquet(path)
+        if mode == "simhash":  # too-short docs are kept as unique
+            eligible = set(docs["doc_id"])
+        else:  # minhash/jaccard drop docs below min_length
+            eligible = set(docs["doc_id"][docs["content"].str.split().str.len() >= 5])
+            assert len(eligible) == len(docs) - 3
+    metered, fast, staged, assigned, staged_assigned = _dedup_and_job(spark, mode, path, tmp_path)
+    assert metered == fast == staged == eligible
+    assert assigned == [0, 0] and staged_assigned == 0
+
+
+# work-dir outputs of each stage name, as the staged jobs lay them out
+_STAGE_DIRS = {
+    "ids": ["ids"],
+    "fps": ["fps"],
+    "encode": ["vectors"],
+    "edges": ["edges", "kept_ids"],
+    "cc": ["assignment"],
+    "dup_keys": ["dup_keys"],
+    "line_firsts": ["line_firsts"],
+}
+
+
+def _job_runner(name):
+    from sparkdedup import pipeline
+    from sparkdedup.config import CCNetConfig, SimHashConfig, SubstringConfig
+
+    cfgs = {
+        "minhash": MinHashConfig(),
+        "simhash": SimHashConfig(),
+        "jaccard": MinHashConfig(threshold=0.7),
+        "substring": SubstringConfig(k=80),
+        "ccnet": CCNetConfig(),
+    }
+    if name == "ann":  # text mode: the job with the most stages
+        return lambda spark, i, o, w: pipeline.ann_job(
+            spark, i, o, w, threshold=0.9, id_column="doc_id", text_column="content",
+            n_centroids=5, n_probe=5,
+        )
+    job = getattr(pipeline, f"{name}_job")
+    return lambda spark, i, o, w: job(spark, i, o, w, cfgs[name], id_column="doc_id")
+
+
+def _rows(spark, path):
+    df = spark.read.parquet(path)
+    return sorted(tuple(r) for r in df.select(*sorted(df.columns)).collect())
+
+
+@pytest.mark.parametrize("name", ["minhash", "simhash", "jaccard", "ann", "substring", "ccnet"])
+def test_resume_after_every_stage(spark, tmp_path, corpus_path, name):
+    """Kill after stage k (delete every later stage's output), rerun:
+    byte-identical output rows, and exactly the stages up to k resume."""
+    run = _job_runner(name)
+    work = str(tmp_path / "work")
+    m = run(spark, corpus_path, str(tmp_path / "out"), work)
+    stages = [s for s in m.stages if s != "write"]
+    assert not any(m.stages[s].resumed for s in stages)
+    want = _rows(spark, str(tmp_path / "out"))
+    assert want
+    for k, stage in enumerate(stages):
+        for later in stages[k + 1 :]:
+            for d in _STAGE_DIRS[later]:
+                shutil.rmtree(os.path.join(work, f"{d}.parquet"), ignore_errors=True)
+        out = str(tmp_path / f"out_{stage}")
+        mk = run(spark, corpus_path, out, work)
+        assert [s for s in mk.stages if s != "write"] == stages
+        assert [mk.stages[s].resumed for s in stages] == [i <= k for i in range(len(stages))], stage
+        assert [mk.stages[s].rows for s in stages] == [m.stages[s].rows for s in stages]
+        assert _rows(spark, out) == want, f"{name}: output differs after resuming from {stage}"
+    kept_ids = os.path.join(work, "kept_ids.parquet")
+    if os.path.exists(kept_ids):
+        # a two-output stage resumes only when BOTH outputs are complete
+        shutil.rmtree(kept_ids)
+        mk = run(spark, corpus_path, str(tmp_path / "out_side"), work)
+        assert mk.stages["ids"].resumed and not mk.stages["edges"].resumed
+        assert _rows(spark, str(tmp_path / "out_side")) == want
