@@ -64,7 +64,12 @@ def connected_components(
     ``limit(threshold+1).toPandas()`` both answers "does the edge list
     fit?" and, when it does, already holds the whole list — the old
     two-action shape (count probe, then toPandas) cost every CC
-    consumer an extra full pass over the edge lineage.
+    consumer an extra full pass over the edge lineage. That one job is
+    not shuffle-free, though: the limit plans a ``CollectLimit``, which
+    shuffles the entire edge list into one partition whenever the edge
+    frame has more than one partition (200k edges in 3 scan partitions,
+    4 vCPUs at ``local[3]``: 1.82 MB shuffled, against 0 MB for a plain
+    ``toPandas()``). A single-partition edge frame pays nothing.
 
     Parameters
     ----------

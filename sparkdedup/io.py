@@ -10,7 +10,6 @@ the identical schema when the table name is a filesystem path
 
 from __future__ import annotations
 
-import math
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -88,20 +87,22 @@ def partitioned_save(
     output: str,
     chunk_size: int = 200_000,
     max_partitions: int = 2048,
-    min_partitions: int = 1,
 ) -> None:
-    """Write parquet with bounded file counts/sizes.
+    """Write parquet as one narrow job: no count pass, no shuffle.
 
     Re-expression of the reference's partitioned_save
-    (minhash_spark.py:302-332): ~chunk_size rows per file, partition
-    count clamped. We use maxRecordsPerFile + repartition instead of the
-    __pid__ partitionBy workaround (one directory level less, same file
-    sizing).
+    (minhash_spark.py:302-332): ``coalesce(max_partitions)`` caps the
+    writing tasks and ``maxRecordsPerFile`` caps each file at
+    ``chunk_size`` rows.
+
+    Unlike the reference, which counts the rows and then repartitions
+    to one file per ~``chunk_size`` rows, files follow the upstream
+    partitioning (already coalesced by AQE), so a heavily filtered
+    output can land in more, smaller files. A ``coalesce`` below the
+    upstream partition count also lowers the last stage's parallelism.
     """
-    total = df.count()
-    parts = max(min_partitions, min(math.ceil(total / max(chunk_size, 1)), max_partitions))
     (
-        df.repartition(parts)
+        df.coalesce(max_partitions)
         .write.option("maxRecordsPerFile", chunk_size)
         .parquet(output, mode="overwrite", compression="snappy")
     )

@@ -227,9 +227,9 @@ def _finalize(
     partitioned_save(kept, output_path)
     m.stages["write"] = StageInfo(time.time() - t)
     out = spark.read.parquet(output_path)
-    m.rows_after = out.count()
     pid_rows = out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     m.partition_rows = {str(r["pid"]): r["count"] for r in pid_rows}
+    m.rows_after = sum(m.partition_rows.values())
     _write_metrics(m, metrics_path)
     return m
 
