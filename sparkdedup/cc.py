@@ -89,9 +89,9 @@ def connected_components(
     # observed ~0.45 edges/doc density needs > ~9M docs in one
     # UNSTAGED call — the staged jobs land edges in parquet first and
     # never hit this) recomputes the edge lineage once for the
-    # distributed path below; the 4M threshold (64 MB collected, driver
-    # union-find a few seconds) keeps every measured corpus on the
-    # single-pass driver side.
+    # distributed path below. The 4M threshold (64 MB collected) keeps
+    # every measured corpus on the single-pass driver side, where the
+    # dict union-find took 6.8 s at 1M edges and 32.3 s at 4M (ROADMAP #3).
     if driver_threshold > 0:
         pdf = edges.select(src, dst).limit(driver_threshold + 1).toPandas()
         if len(pdf) <= driver_threshold:

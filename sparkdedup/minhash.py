@@ -10,8 +10,10 @@ the component-minimum row (minhash_spark.py:524-528).
 
 Architecture (Spark-first, NOT a port):
   * signatures: one Arrow-batched pandas UDF, NumPy-vectorized across
-    the whole batch (chunked ``np.minimum.reduceat`` over concatenated
-    shingle arrays) — replaces the reference's per-row rdd.flatMap.
+    the whole batch (fixed slices of the concatenated shingle hashes
+    folded by ``shingle.fold_segments``, shared with SimHash: peak
+    O(chunk × num_perm) whatever the document sizes) — replaces the
+    reference's per-row rdd.flatMap.
   * banding: JVM-side ``posexplode`` of the array<binary> signature.
   * candidate edges: pre-aggregated group-min + join back, NOT
     groupBy().collect_list: map-side partial aggregation means a
@@ -40,7 +42,7 @@ from sparkdedup.cc import COMPONENT, DedupResult, cluster_keep  # noqa: F401 (CO
 from sparkdedup.config import MinHashConfig
 from sparkdedup.hashing import generate_permutations
 from sparkdedup.io import DOC_ID
-from sparkdedup.shingle import word_shingle_hashes_batch
+from sparkdedup.shingle import fold_segments, word_shingle_hashes_batch
 
 # hash_bits -> (dtype, max_hash, modulo_prime); mirrors the reference
 # HASH_CONFIG (minhash.py:289-296): 64-bit is the legacy-datasketch mode
@@ -101,6 +103,11 @@ def compute_band_signatures(
     """Pure-Python/NumPy core: per doc, the B band byte-signatures
     (None when the doc has < min_length tokens).
 
+    The batch's shingle hashes are permuted and min-reduced in fixed
+    _PERMUTE_CHUNK-row slices by the shared ``shingle.fold_segments``
+    loop, so peak memory is O(_PERMUTE_CHUNK * num_perm) whatever the
+    document sizes.
+
     This is the function the golden tests pin against the NumPy oracle;
     the pandas UDF below is just its Arrow wrapper.
     """
@@ -108,27 +115,9 @@ def compute_band_signatures(
     dtype, max_hash, prime = _HASH_CONFIG[cfg.hash_bits]
     a_coef, b_coef = generate_permutations(cfg.num_perm, int(prime), cfg.seed, dtype=dtype)
 
-    if cfg.base_hash == "sha1":
-        per_doc = _sha1_shingle_hashes(texts, cfg)
-    else:
-        per_doc = word_shingle_hashes_batch(texts, cfg.ngram, cfg.min_length)
-    if cfg.hash_bits == 16:
-        per_doc = [None if h is None else (h & np.uint32(0xFFFF)).astype(np.uint16) for h in per_doc]
-    elif cfg.hash_bits == 64:
-        per_doc = [None if h is None else h.astype(np.uint64) for h in per_doc]
-    out: List[Optional[List[bytes]]] = [None] * len(texts)
-
-    # chunk whole docs so each permute matrix stays bounded
-    chunk_idx: List[int] = []
-    chunk_counts: List[int] = []
-    chunk_hashes: List[np.ndarray] = []
-    budget = 0
-
-    def flush() -> None:
-        nonlocal budget
-        if not chunk_idx:
-            return
-        h = np.concatenate(chunk_hashes).astype(dtype, copy=False)
+    def permute(h: np.ndarray) -> np.ndarray:
+        # the cast keeps the low bits: the 16-bit mode's xxh32 mask
+        h = h.astype(dtype, copy=False)
         with np.errstate(over="ignore"):
             # uint32 wrap-around BEFORE the modulus — the reference
             # relies on this exact overflow behavior (minhash.py:122).
@@ -137,51 +126,19 @@ def compute_band_signatures(
             ph += b_coef[None, :]
             ph %= prime
             ph &= max_hash
-        starts = np.concatenate(([0], np.cumsum(chunk_counts)[:-1]))
-        mins = np.minimum.reduceat(ph, starts, axis=0)
-        for row, doc_i in enumerate(chunk_idx):
-            sig = mins[row]
-            out[doc_i] = [sig[band * r : (band + 1) * r].tobytes() for band in range(b)]
-        chunk_idx.clear()
-        chunk_counts.clear()
-        chunk_hashes.clear()
-        budget = 0
+        return ph
 
-    def oversized_minima(hashes: np.ndarray) -> np.ndarray:
-        # a single huge doc (minified/generated source) must NOT
-        # materialize an (n_shingles, num_perm) matrix: permute in
-        # fixed slices and fold partial minima, so peak memory is
-        # O(_PERMUTE_CHUNK * num_perm) regardless of doc size.
-        mins = np.full(cfg.num_perm, max_hash, dtype=dtype)
-        for s in range(0, hashes.size, _PERMUTE_CHUNK):
-            h = hashes[s : s + _PERMUTE_CHUNK].astype(dtype, copy=False)
-            with np.errstate(over="ignore"):
-                ph = h[:, None] * a_coef[None, :]
-                ph += b_coef[None, :]
-                ph %= prime
-                ph &= max_hash
-            np.minimum(mins, ph.min(axis=0), out=mins)
-        return mins
-
-    for i, hashes in enumerate(per_doc):
-        if hashes is None:
-            continue
-        if hashes.size == 0:
-            # len(tokens) >= min_length guarantees >= 1 shingle, but be safe
-            out[i] = [np.full(r, max_hash, dtype=dtype).tobytes()] * b
-            continue
-        if hashes.size >= _PERMUTE_CHUNK:
-            sig = oversized_minima(hashes)
-            out[i] = [sig[band * r : (band + 1) * r].tobytes() for band in range(b)]
-            continue
-        chunk_idx.append(i)
-        chunk_counts.append(hashes.size)
-        chunk_hashes.append(hashes)
-        budget += hashes.size
-        if budget >= _PERMUTE_CHUNK:
-            flush()
-    flush()
-    return out
+    if cfg.base_hash == "sha1":
+        per_doc = _sha1_shingle_hashes(texts, cfg)
+    else:
+        per_doc = word_shingle_hashes_batch(texts, cfg.ngram, cfg.min_length)
+    # a doc without shingles keeps the all-max_hash initial signature
+    init = np.full((len(texts), cfg.num_perm), max_hash, dtype=dtype)
+    sigs = fold_segments(per_doc, permute, np.minimum, init, _PERMUTE_CHUNK)
+    return [
+        None if h is None else [sig[band * r : (band + 1) * r].tobytes() for band in range(b)]
+        for h, sig in zip(per_doc, sigs)
+    ]
 
 
 def make_signature_udf(cfg: MinHashConfig):

@@ -25,7 +25,7 @@ re.UNICODE there).
 from __future__ import annotations
 
 import re
-from typing import List, Optional, Sequence, Tuple
+from typing import Callable, List, Optional, Sequence, Tuple
 
 import numpy as np
 
@@ -261,3 +261,36 @@ def char_shingle_hashes128_batch(
             out.append(arr)
             pos += c
     return out
+
+
+def fold_segments(
+    per_doc: Sequence[Optional[np.ndarray]],
+    transform: Callable[[np.ndarray], np.ndarray],
+    ufunc: np.ufunc,
+    acc: np.ndarray,
+    chunk: int,
+) -> np.ndarray:
+    """acc[i] = ufunc(acc[i], ufunc over transform(per_doc[i]) rows)
+    for every doc; None and empty docs keep acc's initial value.
+
+    The batch's rows are concatenated and walked in fixed ``chunk``-row
+    slices, each transformed, reduced per doc with ``ufunc.reduceat``
+    and folded into the contiguous run of docs it touches, so peak
+    memory is O(chunk × width) whatever the document sizes."""
+    docs = [i for i, h in enumerate(per_doc) if h is not None and len(h)]
+    if not docs:
+        return acc
+    rows = np.concatenate([per_doc[i] for i in docs])
+    ends = np.cumsum([len(per_doc[i]) for i in docs])
+    docs = np.asarray(docs)
+    for s in range(0, len(rows), chunk):
+        e = min(s + chunk, len(rows))
+        # docs lo..hi-1 overlap [s, e); each after the first starts at
+        # the previous one's end
+        lo = np.searchsorted(ends, s, side="right")
+        hi = np.searchsorted(ends, e) + 1
+        starts = np.concatenate(([0], ends[lo : hi - 1] - s))
+        part = ufunc.reduceat(transform(rows[s:e]), starts, axis=0, dtype=acc.dtype)
+        k = docs[lo:hi]
+        acc[k] = ufunc(acc[k], part)
+    return acc

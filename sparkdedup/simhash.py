@@ -13,10 +13,11 @@ within-bucket pairs with Hamming distance <= bit_diff are unioned
 
 Spark-first design:
   * fingerprints: ONE pandas UDF — shingles are hashed in vectorized
-    xxh64 calls, bit counts via np.add.reduceat over a concatenated
-    (S, f) bit matrix. Oversized docs (and oversized batches) are
-    folded in fixed _BIT_CHUNK slices with accumulated partial bit
-    counts, so peak memory is bounded regardless of document size.
+    xxh64 calls; like the MinHash signatures, fixed _BIT_CHUNK slices
+    of the batch's concatenated hashes go through one helper
+    (``shingle.fold_segments``: (S, f) bit matrix, then
+    ``np.add.reduceat`` per doc), so peak memory is O(chunk × f)
+    whatever the document sizes.
   * bucket keys: JVM-side bit extraction from driver-precomputed block
     layouts, one xxhash64 long per ordered permutation over
     (pidx, leading block values). Including the permutation index
@@ -54,7 +55,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from sparkdedup.cc import DedupResult, cluster_keep
 from sparkdedup.config import SimHashConfig
 from sparkdedup.io import DOC_ID
-from sparkdedup.shingle import char_shingle_hashes64_batch, char_shingle_hashes128_batch
+from sparkdedup.shingle import char_shingle_hashes64_batch, char_shingle_hashes128_batch, fold_segments
 
 FP = "__fp__"
 
@@ -207,76 +208,23 @@ def _fingerprint_words(
     (None = too short). Majority rule matches the reference: bit set
     iff sum(2*bit - 1) > 0 over shingles (ties -> 0, simhash.py:297-298).
 
-    Memory-bounded: docs are folded into <= _BIT_CHUNK-shingle groups
-    (vectorized reduceat fast path); a single oversized doc is sliced
-    with accumulated partial bit counts instead of materializing its
-    full (S, f) matrix."""
+    Per-doc bit counts are summed over fixed _BIT_CHUNK-shingle slices
+    of the batch by the shared ``shingle.fold_segments`` loop, so peak
+    memory is O(_BIT_CHUNK * f) whatever the document sizes."""
     f = cfg.f
-    if f == 64:
-        per_doc = char_shingle_hashes64_batch(texts, cfg.ngram, cfg.min_length)
-    elif f == 128:
-        per_doc = char_shingle_hashes128_batch(texts, cfg.ngram, cfg.min_length)
-    else:
-        raise ValueError(f"simhash f must be 64 or 128, got {f}")
-    out: List[Optional[Tuple[int, ...]]] = [None] * len(texts)
-
-    g_idx: List[int] = []
-    g_arr: List[np.ndarray] = []
-    g_cnt: List[int] = []
-    budget = 0
-
-    def flush() -> None:
-        nonlocal budget
-        if not g_idx:
-            return
-        allh = np.concatenate(g_arr)
-        bits = _bits_matrix(allh, f)
-        counts = np.asarray(g_cnt)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        ones = np.add.reduceat(bits, starts, axis=0, dtype=np.int64)
-        maj = (2 * ones - counts[:, None]) > 0
-        for row, doc_i in enumerate(g_idx):
-            out[doc_i] = _pack_words(maj[row])
-        g_idx.clear()
-        g_arr.clear()
-        g_cnt.clear()
-        budget = 0
-
-    for i, h in enumerate(per_doc):
-        if h is None:
-            continue
-        n = h.shape[0]
-        if n == 0:
-            out[i] = _pack_words(np.zeros(f, dtype=bool))
-            continue
-        if n >= _BIT_CHUNK:
-            ones = np.zeros(f, dtype=np.int64)
-            for s in range(0, n, _BIT_CHUNK):
-                ones += _bits_matrix(h[s : s + _BIT_CHUNK], f).sum(axis=0, dtype=np.int64)
-            out[i] = _pack_words((2 * ones - n) > 0)
-            continue
-        g_idx.append(i)
-        g_arr.append(h)
-        g_cnt.append(n)
-        budget += n
-        if budget >= _BIT_CHUNK:
-            flush()
-    flush()
-    return out
+    hashes_batch = char_shingle_hashes64_batch if f == 64 else char_shingle_hashes128_batch
+    per_doc = hashes_batch(texts, cfg.ngram, cfg.min_length)
+    init = np.zeros((len(texts), f), dtype=np.int64)
+    ones = fold_segments(per_doc, lambda h: _bits_matrix(h, f), np.add, init, _BIT_CHUNK)
+    counts = np.array([0 if h is None else len(h) for h in per_doc])
+    maj = 2 * ones - counts[:, None] > 0
+    return [None if h is None else _pack_words(m) for h, m in zip(per_doc, maj)]
 
 
 def compute_fingerprints(texts: List[str], cfg: SimHashConfig) -> List[Optional[int]]:
     """f=64 fingerprints as signed longs (golden-test-pinned API)."""
     assert cfg.f == 64
     return [w if w is None else w[0] for w in _fingerprint_words(texts, cfg)]
-
-
-def compute_fingerprints128(
-    texts: List[str], cfg: SimHashConfig
-) -> List[Optional[Tuple[int, int]]]:
-    """f=128 fingerprints as (hi, lo) signed-long pairs."""
-    assert cfg.f == 128
-    return _fingerprint_words(texts, cfg)
 
 
 _FP128_SCHEMA = StructType([StructField("hi", LongType()), StructField("lo", LongType())])
@@ -299,7 +247,7 @@ def make_fingerprint_udf(cfg: SimHashConfig):
         from sparkdedup.tuning import tune_worker_memory
 
         tune_worker_memory()
-        words = compute_fingerprints128(texts.tolist(), cfg)
+        words = _fingerprint_words(texts.tolist(), cfg)
         return pd.DataFrame(
             {
                 "hi": pd.Series([None if w is None else w[0] for w in words], dtype="object"),

@@ -10,6 +10,7 @@ pipeline, so the two paths only share the pinned xxh32 primitive
 
 from __future__ import annotations
 
+import hashlib
 import re
 from typing import Dict, List, Optional, Set, Tuple
 
@@ -54,10 +55,19 @@ _HASH_CONFIG = {
 
 
 def doc_signature(
-    text: str, ngram: int, min_length: int, num_perm: int, seed: int, hash_bits: int = 32
+    text: str,
+    ngram: int,
+    min_length: int,
+    num_perm: int,
+    seed: int,
+    hash_bits: int = 32,
+    base_hash: str = "xxh32",
 ) -> Optional[np.ndarray]:
-    """Reference embed path, one doc at a time (minhash_spark.py:222-226;
-    HASH_CONFIG dtype table minhash.py:289-296)."""
+    """Reference embed path, one doc at a time, over the doc's whole
+    (shingles, num_perm) permute matrix (minhash_spark.py:222-226;
+    HASH_CONFIG dtype table minhash.py:289-296). base_hash="sha1" is the
+    non-Spark default: the little-endian d=min(hash_bits, 32)-bit sha1
+    prefix (hashfunc.py:62-92)."""
     tokens = NON_ALPHA.split(text.lower())
     if len(tokens) < min_length:
         return None
@@ -68,7 +78,14 @@ def doc_signature(
             " ".join(tokens[i : i + ngram]).lower().encode("utf-8") for i in range(len(tokens) - ngram + 1)
         }
     dtype, max_hash, prime = _HASH_CONFIG[hash_bits]
-    hashes = xxh32_batch(sorted(shingles))
+    if base_hash == "sha1":
+        d = min(hash_bits, 32)
+        hashes = np.array(
+            [int.from_bytes(hashlib.sha1(s).digest()[: d // 8], "little") for s in sorted(shingles)],
+            dtype=np.uint32,
+        )
+    else:
+        hashes = xxh32_batch(sorted(shingles))
     if hash_bits == 16:
         hashes = (hashes & np.uint32(0xFFFF)).astype(np.uint16)
     else:

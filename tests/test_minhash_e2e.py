@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from sparkdedup.config import MinHashConfig
 from sparkdedup.fixtures import generate_code_files
 from sparkdedup.minhash import band_edges, minhash_bands, minhash_dedup
-from tests.oracle import cluster_pairs, minhash_clusters
+from tests.oracle import cluster_pairs, doc_signature, minhash_clusters
 
 N_ROWS = 600
 
@@ -132,38 +132,44 @@ def test_minhash_hash_bits_variants_match_oracle(spark, corpus, corpus_df, hash_
     assert len(op & sp) / max(len(sp), 1) >= 0.99
 
 
-def test_sha1_base_hash_signature_parity():
-    """base_hash='sha1' (reference non-Spark default): the band
-    signature equals a direct per-shingle sha1 + permute + min oracle."""
-    import hashlib
-    import struct
+def _distinct_words(prefix, n_shingles, ngram=5):
+    """A doc of exactly n_shingles distinct word n-grams."""
+    return " ".join(f"{prefix}{i}" for i in range(n_shingles + ngram - 1))
 
-    import numpy as np
 
-    from sparkdedup.config import MinHashConfig
-    from sparkdedup.hashing import generate_permutations
-    from sparkdedup.minhash import compute_band_signatures
-    from sparkdedup.shingle import word_shingles
+@pytest.mark.parametrize(
+    "base_hash,hash_bits",
+    [(bh, hb) for bh in ("xxh32", "sha1") for hb in (16, 32, 64)],
+)
+def test_band_signatures_match_unchunked_oracle(base_hash, hash_bits):
+    """compute_band_signatures equals a per-doc, unchunked permute-and-min
+    on a batch whose docs end exactly on, straddle and span several
+    _PERMUTE_CHUNK slices, next to null, too-short and repeated docs."""
+    from sparkdedup.minhash import _PERMUTE_CHUNK, compute_band_signatures
 
-    cfg = MinHashConfig(base_hash="sha1", num_perm=32, b=8, r=4)
-    text = "the quick brown fox jumps over the lazy dog again and again today"
-    [sig] = compute_band_signatures([text], cfg)
-    assert sig is not None and len(sig) == 8
-
-    prime = np.uint32((1 << 32) - 5)
-    a, bcoef = generate_permutations(32, int(prime), cfg.seed, dtype=np.uint32)
-    hs = np.array(
-        sorted(
-            struct.unpack("<I", hashlib.sha1(s).digest()[:4])[0]
-            for s in word_shingles(text, cfg.ngram, cfg.min_length)
-        ),
-        dtype=np.uint32,
-    )
-    with np.errstate(over="ignore"):
-        ph = (hs[:, None] * a[None, :] + bcoef[None, :]) % prime & np.uint32(0xFFFFFFFF)
-    mins = ph.min(axis=0)
-    want = [mins[i * 4 : (i + 1) * 4].tobytes() for i in range(8)]
-    assert sig == want
+    chunk = _PERMUTE_CHUNK
+    cfg = MinHashConfig(base_hash=base_hash, hash_bits=hash_bits, num_perm=32, b=8, r=4)
+    texts = [
+        None,
+        "too short",
+        _distinct_words("a", 60),
+        _distinct_words("b", chunk - 60),  # ends exactly on a slice boundary
+        _distinct_words("c", 700),
+        _distinct_words("d", 700),  # straddles the second boundary
+        _distinct_words("e", 3 * chunk + 500),  # spans three boundaries
+        "the quick brown fox jumps over the lazy dog " * 3,
+        None,
+    ]
+    b, r = cfg.resolved_bands()
+    want = []
+    for t in texts:
+        sig = None if t is None else doc_signature(
+            t, cfg.ngram, cfg.min_length, cfg.num_perm, cfg.seed, hash_bits, base_hash
+        )
+        want.append(None if sig is None else [sig[i * r : (i + 1) * r].tobytes() for i in range(b)])
+    got = compute_band_signatures(texts, cfg)
+    assert got == want
+    assert got[0] is None and got[1] is None and all(g is not None for g in got[2:8])
 
 
 def test_sha1_base_hash_dedups_planted_duplicates(spark):

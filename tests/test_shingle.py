@@ -3,8 +3,9 @@
 minhash_spark.py:128-133)."""
 
 import numpy as np
+import pytest
 
-from sparkdedup.shingle import char_shingles, word_shingle_hashes_batch, word_shingles
+from sparkdedup.shingle import char_shingles, fold_segments, word_shingle_hashes_batch, word_shingles
 
 
 def test_word_shingles_basic():
@@ -49,3 +50,21 @@ def test_unicode_tokenization_matches_python_re():
     s = word_shingles("naïve café 数据 test word", 1, 1)
     assert "naïve".encode() in s
     assert "数据".encode() in s
+
+
+@pytest.mark.parametrize("chunk", [1, 3, 7, 50])
+def test_fold_segments_matches_per_doc_reduce(chunk):
+    """Every slice size, including ones that end exactly on a doc
+    boundary, gives each doc its own whole-doc reduction; None and
+    empty docs keep the accumulator's initial value."""
+    rng = np.random.default_rng(chunk)
+    sizes = [0, 3, None, 1, 7, 4, 0, 14, 2, None, 21, 1]
+    per_doc = [None if n is None else rng.integers(0, 1000, size=(n, 2)) for n in sizes]
+    for ufunc, init in ((np.minimum, 10_000), (np.add, 5)):
+        acc = np.full((len(per_doc), 4), init, dtype=np.int64)
+        got = fold_segments(per_doc, lambda h: np.hstack([h, -h]), ufunc, acc, chunk)
+        for i, h in enumerate(per_doc):
+            want = np.full(4, init)
+            if h is not None and len(h):
+                want = ufunc(want, ufunc.reduce(np.hstack([h, -h]), axis=0))
+            assert got[i].tolist() == want.tolist()

@@ -11,7 +11,7 @@ from sparkdedup.simhash import (
     permutation_keys,
     simhash_dedup,
 )
-from tests.oracle import cluster_pairs, simhash_bucket_keys, simhash_clusters
+from tests.oracle import _simhash_fp, cluster_pairs, simhash_bucket_keys, simhash_clusters
 
 
 def test_block_layout_reference_quirk():
@@ -43,6 +43,47 @@ def test_fingerprint_basics():
     assert fps[0] == fps[1]
     assert fps[0] != fps[2]
     assert fps[3] is None  # below min_length chars
+
+
+def _random_chars(rng, n):
+    return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz0123456789") for _ in range(n))
+
+
+@pytest.mark.parametrize("f", [64, 128])
+def test_fingerprints_match_unsliced_oracle(f):
+    """compute_fingerprints (f=64) and _fingerprint_words (f=128) equal
+    the oracle's per-doc bit majority over all of a doc's shingles, on a
+    batch whose docs straddle and span several _BIT_CHUNK slices, next
+    to null and too-short docs."""
+    import random
+
+    from sparkdedup.shingle import char_shingles
+    from sparkdedup.simhash import _BIT_CHUNK, _fingerprint_words
+
+    def oracle_words(text):  # f-bit fingerprint -> f//64 signed longs, hi first
+        fp = None if text is None else _simhash_fp(text, cfg.ngram, cfg.min_length, f)
+        if fp is None:
+            return None
+        words = [(fp >> (f - 64 * (i + 1))) & ((1 << 64) - 1) for i in range(f // 64)]
+        return tuple(w - (1 << 64) if w >= 1 << 63 else w for w in words)
+
+    rng = random.Random(f)
+    cfg = SimHashConfig(f=f, ngram=5)
+    texts = [
+        None,
+        "abc",
+        "hello world hello world",
+        _random_chars(rng, 40_000),
+        _random_chars(rng, 40_000),  # straddles the first boundary
+        _random_chars(rng, 2 * _BIT_CHUNK + 9_000),  # spans two boundaries
+        "short tail doc",
+    ]
+    assert len(char_shingles(texts[5], cfg.ngram, cfg.min_length)) > 2 * _BIT_CHUNK
+    want = [oracle_words(t) for t in texts]
+    assert want[0] is None and want[1] is None and all(w is not None for w in want[2:])
+    assert _fingerprint_words(texts, cfg) == want
+    if f == 64:
+        assert compute_fingerprints(texts, cfg) == [w if w is None else w[0] for w in want]
 
 
 def _collision_graph(key_sets):
