@@ -22,7 +22,7 @@ in the edge list, ``component`` = minimum vertex id of its component.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, List, Tuple
+from typing import Any, List, Optional, Tuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -48,6 +48,7 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     driver_threshold: int = 4_000_000,
+    n_edges: Optional[int] = None,
 ) -> Tuple[DataFrame, CCStats]:
     """Compute connected components of an undirected edge list.
 
@@ -60,21 +61,26 @@ def connected_components(
     checkpointed distributed label propagation runs. Both produce the
     identical min-id labeling.
 
-    The sizing probe and the driver-path edge collection are ONE job:
-    ``limit(threshold+1).toPandas()`` both answers "does the edge list
-    fit?" and, when it does, already holds the whole list — the old
-    two-action shape (count probe, then toPandas) cost every CC
-    consumer an extra full pass over the edge lineage. That one job is
-    not shuffle-free, though: the limit plans a ``CollectLimit``, which
-    shuffles the entire edge list into one partition whenever the edge
-    frame has more than one partition (200k edges in 3 scan partitions,
-    4 vCPUs at ``local[3]``: 1.82 MB shuffled, against 0 MB for a plain
+    A caller that already knows the edge count passes it as
+    ``n_edges`` and skips the sizing probe: at or below the threshold
+    the edges are collected with a plain ``toPandas()`` (one job, no
+    shuffle); above it the distributed path starts at once. Without
+    the hint (the lazy ``*_dedup`` fast path), the sizing probe and the
+    driver-path edge collection are ONE job: ``limit(threshold+1)
+    .toPandas()`` both answers "does the edge list fit?" and, when it
+    does, already holds the whole list. That job is not shuffle-free:
+    the limit plans a ``CollectLimit``, which shuffles the entire edge
+    list into one partition whenever the edge frame has more than one
+    partition (200k edges in 3 scan partitions, 4 vCPUs at
+    ``local[3]``: 1.82 MB shuffled, against 0 MB for a plain
     ``toPandas()``). A single-partition edge frame pays nothing.
 
     Parameters
     ----------
     edges : DataFrame[src: long, dst: long]
         Undirected edges (each pair listed once in either direction).
+    n_edges : int, optional
+        Exact row count of ``edges`` when the caller already holds it.
 
     Returns
     -------
@@ -82,18 +88,23 @@ def connected_components(
     """
     stats = CCStats()
 
-    # the probe runs over the UNPERSISTED lineage on purpose: persisting
-    # first costs the common driver path an extra cache-materialization
-    # job (+~0.3 s/query measured at bench scale). The price is that an
-    # OVERFLOWING probe (> threshold edges, < 1/2000 of corpora at the
-    # observed ~0.45 edges/doc density needs > ~9M docs in one
-    # UNSTAGED call — the staged jobs land edges in parquet first and
-    # never hit this) recomputes the edge lineage once for the
+    # the probe (skipped when the caller passes n_edges) runs over the
+    # UNPERSISTED lineage on purpose: persisting first costs the common
+    # driver path an extra cache-materialization job (+~0.3 s/query
+    # measured at bench scale). The price is that an OVERFLOWING probe
+    # (> threshold edges, < 1/2000 of corpora at the observed ~0.45
+    # edges/doc density needs > ~9M docs in one UNSTAGED call — the
+    # staged jobs pass their staged edge count and never probe)
+    # recomputes the edge lineage once for the
     # distributed path below. The 4M threshold (64 MB collected) keeps
     # every measured corpus on the single-pass driver side, where the
     # dict union-find took 6.8 s at 1M edges and 32.3 s at 4M (ROADMAP #3).
-    if driver_threshold > 0:
-        pdf = edges.select(src, dst).limit(driver_threshold + 1).toPandas()
+    try_driver = driver_threshold > 0 if n_edges is None else n_edges <= driver_threshold
+    if try_driver:
+        pairs = edges.select(src, dst)
+        if n_edges is None:
+            pairs = pairs.limit(driver_threshold + 1)
+        pdf = pairs.toPandas()
         if len(pdf) <= driver_threshold:
             stats.n_edges = len(pdf)
             return _driver_cc_pdf(pdf, src, dst, stats, edges.sparkSession)
@@ -213,7 +224,8 @@ def cluster_keep(
     connected components -> keep each component's representative.
 
     collect_metrics=True persists the edges so their count
-    (``CCStats.n_edges``) and the CC pass share one materialization.
+    (``CCStats.n_edges``) and the CC pass share one materialization,
+    and hands that count to CC, which then skips its sizing probe.
     Otherwise the edges stay lazy: the driver CC path consumes the
     lineage in one collect job and reports ``n_edges`` itself, so the
     empty-graph exit costs no extra probe. On an empty graph CC is
@@ -230,7 +242,7 @@ def cluster_keep(
         if n_edges == 0:
             stats = CCStats(mode="empty", n_edges=0)
         else:
-            assignment, stats = connected_components(edges)
+            assignment, stats = connected_components(edges, n_edges=n_edges)
             if n_edges is not None:
                 stats.n_edges = n_edges
         if stats.n_edges == 0:

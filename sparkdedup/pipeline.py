@@ -213,7 +213,7 @@ def _cluster_write(
     component's representative -> write."""
     assignment = _stage(
         spark, m, "cc", os.path.join(work_dir, "assignment.parquet"),
-        lambda: connected_components(edges)[0],
+        lambda: connected_components(edges, n_edges=m.stages["edges"].rows)[0],
     )
     t = time.time()
     kept = keep_representatives(docs, assignment, id_col)

@@ -1,4 +1,5 @@
-"""io.partitioned_save: one narrow write job with bounded files."""
+"""io.partitioned_save: one narrow write job with bounded files; the
+session's block codec."""
 
 import os
 
@@ -30,3 +31,8 @@ def test_partitioned_save_is_one_narrow_job(spark, tmp_path):
     assert max(sizes) <= 7
     rows = sorted(tuple(r) for r in spark.read.parquet(out).collect())
     assert rows == [(i, 3 * i) for i in range(50)]
+
+
+def test_session_compresses_blocks_with_zstd(spark):
+    # shuffle, broadcast and spill blocks (not the parquet files)
+    assert spark.sparkContext.getConf().get("spark.io.compression.codec") == "zstd"
