@@ -51,7 +51,7 @@ def get_spark(
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         # shuffle, broadcast and spill blocks: much of what the shuffles
         # carry is document text, which zstd (default level) stores in
-        # about a third less space than the lz4 default at flat task time
+        # about a third less space than the lz4 default
         .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.files.maxPartitionBytes", "256m")
         .config("spark.driver.memory", os.environ.get("SPARKDEDUP_DRIVER_MEM", "8g"))

@@ -1,14 +1,15 @@
 """Spark cost of the six staged jobs, fresh and fully resumed, per block codec.
 
 Runs minhash, simhash, jaccard, substring, ccnet and ann (text mode)
-``*_job`` on a seeded code corpus, each codec in its own Spark process
-(``spark.io.compression.codec`` is fixed when the context starts; it is
-passed through ``get_spark``'s ``extra_conf``). Per job and run it
-records Spark jobs, tasks, task seconds and shuffle-write MB from the
-status store, plus the output row count and the sha256 of its sorted
-rows.
+``*_job`` on the 3,000-doc ``write_code_files(seed=42)`` corpus at
+``local[3]``, each codec in its own spawned Python process, so in its
+own JVM (``spark.io.compression.codec`` is fixed when the context
+starts; it is passed through ``get_spark``'s ``extra_conf``). Per job
+and run it records Spark jobs, tasks, task seconds and shuffle-write MB
+from the status store, plus the output row count and the sha256 of its
+sorted rows.
 
-Usage: python tools/staged_jobs.py [--docs N] [--cpus N] [--out FILE] CODEC...
+Usage: python tools/staged_jobs.py [--out FILE] CODEC...
 Prints (or writes) one JSON document keyed by codec.
 """
 
@@ -17,16 +18,19 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import multiprocessing
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
+from concurrent.futures import ProcessPoolExecutor
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 JOBS = ["minhash", "simhash", "jaccard", "substring", "ccnet", "ann"]
+DOCS = 3000
+CPUS = 3
 
 
 def _runner(name):
@@ -55,13 +59,13 @@ def _digest(spark, path):
     return len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()
 
 
-def one_codec(codec: str, docs: int, cpus: int) -> dict:
+def one_codec(codec: str) -> dict:
     from perfbench.probe import StatusStore
     from sparkdedup.fixtures import write_code_files
     from sparkdedup.session import get_spark
 
     spark = get_spark(
-        app_name="staged-jobs", master=f"local[{cpus}]",
+        app_name="staged-jobs", master=f"local[{CPUS}]",
         extra_conf={"spark.io.compression.codec": codec, "spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -69,7 +73,7 @@ def one_codec(codec: str, docs: int, cpus: int) -> dict:
     tmp = tempfile.mkdtemp(prefix="staged-jobs-")
     out = {}
     try:
-        corpus = write_code_files(os.path.join(tmp, "corpus.parquet"), n_rows=docs, seed=42)
+        corpus = write_code_files(os.path.join(tmp, "corpus.parquet"), n_rows=DOCS, seed=42)
         for name in JOBS:
             run, work = _runner(name), os.path.join(tmp, name, "work")
             out[name] = {}
@@ -96,26 +100,19 @@ def one_codec(codec: str, docs: int, cpus: int) -> dict:
 def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("codecs", nargs="+")
-    ap.add_argument("--docs", type=int, default=3000)
-    ap.add_argument("--cpus", type=int, default=3)
     ap.add_argument("--out")
-    ap.add_argument("--one", action="store_true", help=argparse.SUPPRESS)
     a = ap.parse_args()
-    if a.one:
-        print(json.dumps(one_codec(a.codecs[0], a.docs, a.cpus)))
-        return
     import pyspark
 
     result = {
         "command": " ".join(["python", "tools/staged_jobs.py", *sys.argv[1:]]),
         "nproc": os.cpu_count(), "spark": pyspark.__version__,
-        "docs": a.docs, "master": f"local[{a.cpus}]", "codecs": {},
+        "docs": DOCS, "master": f"local[{CPUS}]", "codecs": {},
     }
+    spawn = multiprocessing.get_context("spawn")
     for codec in a.codecs:
-        cmd = [sys.executable, os.path.abspath(__file__), "--one", codec,
-               "--docs", str(a.docs), "--cpus", str(a.cpus)]
-        line = subprocess.run(cmd, check=True, stdout=subprocess.PIPE, text=True).stdout
-        result["codecs"][codec] = json.loads(line.strip().splitlines()[-1])
+        with ProcessPoolExecutor(1, mp_context=spawn) as pool:
+            result["codecs"][codec] = pool.submit(one_codec, codec).result()
     text = json.dumps(result, indent=2)
     if a.out:
         with open(a.out, "w") as f:
