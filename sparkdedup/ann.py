@@ -68,12 +68,21 @@ def pair_dot(a: pd.Series, b: pd.Series) -> pd.Series:
     """Batched dot product of two aligned array columns: one vectorized
     (batch, dim) row-wise product-sum per Arrow batch instead of ~dim
     interpreted Catalyst lambda evaluations per row — the hot-path
-    scorer for candidate verification and IVF search."""
+    scorer for candidate verification and IVF search.
+
+    Runs once per pair in every plan: it is flagged non-deterministic,
+    so the ``sim >= threshold`` filter after it is not rewritten into a
+    second ArrowEvalPython of the same call."""
     from sparkdedup.tuning import tune_worker_memory
 
     tune_worker_memory()
     ma, mb = _stack(a), _stack(b)
     return pd.Series(np.einsum("ij,ij->i", ma, mb))
+
+
+# pure; the flag only stops Catalyst copying the call into a pushed-down
+# filter
+pair_dot = pair_dot.asNondeterministic()
 
 
 def auto_n_centroids(n_rows: int) -> int:

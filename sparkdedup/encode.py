@@ -75,6 +75,13 @@ def hash_embed_batch(
 
 
 def make_hash_embedding_udf(dim: int = 256, ngram: int = 3, min_length: int = 5, seed: int = SEED):
+    """Arrow-batched UDF: text -> ``hash_embed_batch`` vector as
+    array<double> (null = no shingles).
+
+    Runs once per row in every plan: it is flagged non-deterministic,
+    so a null filter after it is not rewritten into a second
+    ArrowEvalPython of the same call."""
+
     @pandas_udf(ArrayType(DoubleType()))
     def embed(texts: pd.Series) -> pd.Series:
         from sparkdedup.tuning import tune_worker_memory
@@ -83,7 +90,9 @@ def make_hash_embedding_udf(dim: int = 256, ngram: int = 3, min_length: int = 5,
         vecs = hash_embed_batch(texts.tolist(), dim, ngram, min_length, seed)
         return pd.Series([None if v is None else v.tolist() for v in vecs])
 
-    return embed
+    # pure; the flag only stops Catalyst copying the call into a
+    # pushed-down filter
+    return embed.asNondeterministic()
 
 
 def encode_documents(

@@ -144,7 +144,11 @@ def compute_band_signatures(
 def make_signature_udf(cfg: MinHashConfig):
     """Arrow-batched UDF: content -> array<binary> of B band signatures
     (null = below min_length, i.e. the reference's length filter,
-    minhash_spark.py:423-425)."""
+    minhash_spark.py:423-425).
+
+    Runs once per row in every plan: it is flagged non-deterministic,
+    so the ``isNotNull`` filter callers put after it is not rewritten
+    into a second ArrowEvalPython of the same call."""
 
     @pandas_udf(ArrayType(BinaryType()))
     def signature(texts: pd.Series) -> pd.Series:
@@ -153,7 +157,9 @@ def make_signature_udf(cfg: MinHashConfig):
         tune_worker_memory()
         return pd.Series(compute_band_signatures(texts.tolist(), cfg))
 
-    return signature
+    # pure; the flag only stops Catalyst copying the call into a
+    # pushed-down filter
+    return signature.asNondeterministic()
 
 
 def minhash_bands(df: DataFrame, cfg: MinHashConfig, id_col: str = DOC_ID) -> DataFrame:

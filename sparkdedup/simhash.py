@@ -231,6 +231,12 @@ _FP128_SCHEMA = StructType([StructField("hi", LongType()), StructField("lo", Lon
 
 
 def make_fingerprint_udf(cfg: SimHashConfig):
+    """Arrow-batched UDF: content -> fingerprint, a long (f=64) or a
+    struct<hi, lo> (f=128); null = too short to fingerprint.
+
+    Runs once per row in every plan: both branches are flagged
+    non-deterministic, so the ``_fp_not_null`` filter callers put after
+    it is not rewritten into a second ArrowEvalPython of the same call."""
     if cfg.f == 64:
 
         @pandas_udf(LongType())
@@ -240,7 +246,9 @@ def make_fingerprint_udf(cfg: SimHashConfig):
             tune_worker_memory()
             return pd.Series(compute_fingerprints(texts.tolist(), cfg), dtype="object")
 
-        return fingerprint
+        # pure; the flag only stops Catalyst copying the call into a
+        # pushed-down filter
+        return fingerprint.asNondeterministic()
 
     @pandas_udf(_FP128_SCHEMA)
     def fingerprint128(texts: pd.Series) -> pd.DataFrame:
@@ -255,7 +263,9 @@ def make_fingerprint_udf(cfg: SimHashConfig):
             }
         )
 
-    return fingerprint128
+    # pure; the flag only stops Catalyst copying the call into a
+    # pushed-down filter
+    return fingerprint128.asNondeterministic()
 
 
 # --- pipeline ------------------------------------------------------------

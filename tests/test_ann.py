@@ -586,3 +586,12 @@ def test_annconfig_rejects_hyperplanes_over_62():
     with pytest.raises(ValueError, match="62"):
         ANNConfig(num_hyperplanes=63)
     ANNConfig(num_hyperplanes=62)  # boundary stays legal
+
+
+def test_pair_dot_runs_once_per_pair(spark, vectors):
+    """near_dup_pairs' ``sim >= threshold`` filter must not re-run the
+    pair_dot kernel: one call in the executed plan."""
+    from tests.plans import udf_evals
+
+    pairs = near_dup_pairs(vectors, DIM, ANNConfig(threshold=0.9), exact=True)
+    assert udf_evals(pairs, "pair_dot") == 1

@@ -90,3 +90,16 @@ def test_ann_job_text_mode_end_to_end_and_resume(spark, tmp_path):
     assert not m2.stages["cc"].resumed
     keys2 = {r["key"] for r in spark.read.parquet(out2).select("key").collect()}
     assert keys2 == keys
+
+
+def test_embedding_udf_runs_once_per_row(spark):
+    """ann_job's text-mode encode shape: the embedding kernel appears
+    once in the executed plan, not again under the null filter."""
+    from pyspark.sql import functions as F
+
+    from sparkdedup.encode import encode_documents
+    from tests.plans import udf_evals
+
+    df = spark.createDataFrame([(1, "def f(x):\n    return x\n" * 4), (2, "ab")], "id long, content string")
+    encoded = encode_documents(df, dim=DIM).filter(F.col("embedding").isNotNull())
+    assert udf_evals(encoded, "embed") == 1

@@ -185,3 +185,23 @@ def test_sha1_base_hash_dedups_planted_duplicates(spark):
     sha_ids = {r["doc_id"] for r in res_sha.kept.select("doc_id").collect()}
     xxh_ids = {r["doc_id"] for r in res_xxh.kept.select("doc_id").collect()}
     assert sha_ids == xxh_ids
+
+
+@pytest.mark.parametrize("shape", ["minhash_bands", "staged", "streaming"])
+def test_signature_udf_runs_once_per_row(spark, corpus_df, shape):
+    """Each signature frame's executed plan calls the kernel once per
+    scan branch: the null filter after the UDF must not be rewritten
+    into a second ArrowEvalPython of the same call."""
+    from sparkdedup.minhash import SIG, make_signature_udf
+    from sparkdedup.streaming import streaming_signatures
+    from tests.plans import udf_evals
+
+    cfg = MinHashConfig()
+    frame = {
+        "minhash_bands": lambda: minhash_bands(corpus_df, cfg),
+        "staged": lambda: corpus_df.select(
+            F.col("__id__"), make_signature_udf(cfg)(F.col(cfg.column)).alias(SIG)
+        ).filter(F.col(SIG).isNotNull()),
+        "streaming": lambda: streaming_signatures(corpus_df, cfg, id_col="__id__"),
+    }[shape]()
+    assert udf_evals(frame, "signature") == 1

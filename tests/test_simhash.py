@@ -216,3 +216,19 @@ def test_simhash_matches_oracle(spark, n_rows):
     precision = len(op & sp) / max(len(sp), 1)
     assert recall >= 0.99, f"recall {recall}"
     assert precision >= 0.99, f"precision {precision}"
+
+
+@pytest.mark.parametrize("f,udf_name", [(64, "fingerprint"), (128, "fingerprint128")])
+def test_fingerprint_udf_runs_once_per_row(spark, f, udf_name):
+    """simhash_job's fps stage shape: the fingerprint kernel appears
+    once in the executed plan, not again under the pushed-down null
+    filter."""
+    from sparkdedup.simhash import FP, _fp_not_null, make_fingerprint_udf
+    from tests.plans import udf_evals
+
+    cfg = SimHashConfig(f=f)
+    df = spark.createDataFrame(generate_code_files(50, seed=42))
+    fps = df.select(F.col("doc_id"), make_fingerprint_udf(cfg)(F.col(cfg.column)).alias(FP)).filter(
+        _fp_not_null(cfg)
+    )
+    assert udf_evals(fps, udf_name) == 1

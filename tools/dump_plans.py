@@ -43,8 +43,8 @@ def main() -> None:
         "Reviewed properties: parquet `PushedFilters`/`ReadSchema` pruning, "
         "WholeStageCodegen spans around the relational core, broadcast joins "
         "for small build sides, AQE wrappers on every exchange, and Arrow "
-        "(`ArrowEvalPython`) only where a signature/fingerprint UDF is "
-        "semantically required.\n"
+        "(`ArrowEvalPython`) only where a Python UDF is semantically required, "
+        "each UDF evaluated once per scan branch.\n"
     )
     for name in PLAN_QUERIES:
         df = qmap[name](spark, sf_dir)
