@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from collections import Counter, defaultdict
 from typing import Dict, List, Optional, Set, Tuple
 
 import numpy as np
@@ -164,6 +165,34 @@ def word_ngram_jaccard(a: str, b: str, n: int = 5) -> float:
     if not sa and not sb:
         return 1.0
     return len(sa & sb) / len(sa | sb)
+
+
+def adjusted_rand_index(labels_a: list, labels_b: list) -> float:
+    """ARI from the contingency table (Hubert & Arabie 1985) — the
+    reference's NEWS-COPY scoring metric
+    (reference tests/benchmark_news.py:39-47, which calls
+    sklearn.metrics.adjusted_rand_score; plain-Python here, so sklearn
+    is not a dependency)."""
+    assert len(labels_a) == len(labels_b)
+    n = len(labels_a)
+    if n < 2:
+        return 1.0
+
+    def c2(x: int) -> int:
+        return x * (x - 1) // 2
+
+    cont: dict = defaultdict(int)
+    for a, b in zip(labels_a, labels_b):
+        cont[(a, b)] += 1
+    sum_ij = sum(c2(v) for v in cont.values())
+    sum_a = sum(c2(v) for v in Counter(labels_a).values())
+    sum_b = sum(c2(v) for v in Counter(labels_b).values())
+    total = c2(n)
+    expected = sum_a * sum_b / total
+    max_index = (sum_a + sum_b) / 2
+    if max_index == expected:
+        return 1.0
+    return (sum_ij - expected) / (max_index - expected)
 
 
 # --- SimHash oracle (transcription of reference simhash.py flow) ---------

@@ -1,11 +1,6 @@
 """ARI implementation pins (known sklearn adjusted_rand_score values)."""
 
-import os
-import sys
-
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
-
-from quality_eval import adjusted_rand_index
+from tests.oracle import adjusted_rand_index
 
 
 def test_ari_perfect_match():
