@@ -552,13 +552,12 @@ def near_dup_candidate_pairs(
         stats = {}
     udf = make_bucket_udf(dim, cfg)
 
-    if cfg.max_bucket_size is not None:
-        n = n_rows if n_rows is not None else v.count()
-        if n <= cfg.max_bucket_size:
-            stats["fast_path"] = True
-            stats["oversized_buckets"] = 0
-            b = v.select("id", F.posexplode(udf(F.col("v"))).alias("table", "bucket"))
-            return _bucket_self_join(b, ["table", "bucket"]).dropDuplicates(["id_a", "id_b"])
+    n = n_rows if n_rows is not None else v.count()
+    if n <= cfg.max_bucket_size:
+        stats["fast_path"] = True
+        stats["oversized_buckets"] = 0
+        b = v.select("id", F.posexplode(udf(F.col("v"))).alias("table", "bucket"))
+        return _bucket_self_join(b, ["table", "bucket"]).dropDuplicates(["id_a", "id_b"])
     stats["fast_path"] = False
 
     # one hash-partition shuffle assigns every row its min-id rep.
@@ -568,16 +567,6 @@ def near_dup_candidate_pairs(
         "rep", F.min("id").over(Window.partitionBy("__vsig__"))
     )
     distinct_v = tagged.filter(F.col("id") == F.col("rep")).select("id", "v")
-    if cfg.max_bucket_size is None:
-        star = tagged.filter(F.col("id") != F.col("rep")).select(
-            F.col("rep").alias("id_a"), F.col("id").alias("id_b")
-        )
-        b = distinct_v.select(
-            "id", F.posexplode(udf(F.col("v"))).alias("table", "bucket")
-        )
-        pairs = _bucket_self_join(b, ["table", "bucket"])
-        return star.unionByName(pairs).dropDuplicates(["id_a", "id_b"])
-
     # materialize ONE skinny frame covering every downstream consumer:
     # (id, rep, table, bucket) — the corpus scan, the vector-carrying
     # __vsig__ window shuffle AND the SRP bucket UDF all run exactly

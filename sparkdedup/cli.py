@@ -115,24 +115,12 @@ def build_parser() -> argparse.ArgumentParser:
     return p
 
 
-def main(argv=None) -> int:
-    args = build_parser().parse_args(argv)
-    from sparkdedup.config import (
-        CCNetConfig,
-        ExactHashConfig,
-        MinHashConfig,
-        SimHashConfig,
-        SubstringConfig,
-    )
-    from sparkdedup.io import partitioned_save, read_documents, with_doc_id
-    from sparkdedup.session import get_spark
-
-    spark = get_spark(app_name=f"sparkdedup-{args.mode}", checkpoint_dir=args.work_dir + "/ckpt")
-    t0 = time.time()
+def _run_staged(spark, args):
+    """Run the staged pipeline for ``args.mode``; returns its metrics."""
+    from sparkdedup import pipeline
+    from sparkdedup.config import CCNetConfig, MinHashConfig, SimHashConfig, SubstringConfig
 
     if args.mode == "minhash":
-        from sparkdedup.pipeline import minhash_job
-
         cfg = MinHashConfig(
             column=args.column,
             ngram=args.ngram_size,
@@ -145,47 +133,31 @@ def main(argv=None) -> int:
             base_hash=args.base_hash,
             seed=args.seed,
         )
-        m = minhash_job(
+        return pipeline.minhash_job(
             spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics
         )
-        print(json.dumps({"mode": "minhash", "before": m.rows_before, "after": m.rows_after, "seconds": round(time.time() - t0, 2)}))
-        return 0
 
     if args.mode == "simhash":
-        from sparkdedup.pipeline import simhash_job
-
         cfg = SimHashConfig(
             column=args.column, ngram=args.ngram_size, f=args.f,
             bit_diff=args.bit_diff, num_bucket=args.num_bucket,
             min_length=args.min_length, seed=args.seed,
         )
-        m = simhash_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
-        print(json.dumps({"mode": "simhash", "before": m.rows_before, "after": m.rows_after, "seconds": round(time.time() - t0, 2)}))
-        return 0
+        return pipeline.simhash_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
 
     if args.mode == "ccnet":
-        from sparkdedup.pipeline import ccnet_job
-
         cfg = CCNetConfig(column=args.column, hash_func=args.hash_func)
-        m = ccnet_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
-        print(json.dumps({"mode": "ccnet", "before": m.rows_before, "after": m.rows_after, "seconds": round(time.time() - t0, 2)}))
-        return 0
+        return pipeline.ccnet_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
 
     if args.mode == "jaccard":
-        from sparkdedup.pipeline import jaccard_job
-
         cfg = MinHashConfig(
             column=args.column, ngram=args.ngram_size, min_length=args.min_length,
             num_perm=args.num_perm, threshold=args.threshold,
         )
-        m = jaccard_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
-        print(json.dumps({"mode": "jaccard", "before": m.rows_before, "after": m.rows_after, "seconds": round(time.time() - t0, 2)}))
-        return 0
+        return pipeline.jaccard_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
 
     if args.mode == "ann":
-        from sparkdedup.pipeline import ann_job
-
-        m = ann_job(
+        return pipeline.ann_job(
             spark, args.input, args.output, args.work_dir,
             threshold=args.threshold,
             id_column=args.index if args.encode_text else args.id_column,
@@ -194,33 +166,39 @@ def main(argv=None) -> int:
             text_column=args.encode_text, encode_dim=args.encode_dim,
             encode_ngram=args.encode_ngram,
         )
-        print(json.dumps({"mode": "ann", "before": m.rows_before, "after": m.rows_after, "seconds": round(time.time() - t0, 2)}))
-        return 0
 
     if args.mode == "substring":
-        from sparkdedup.pipeline import substring_job
-
         cfg = SubstringConfig(column=args.column, k=args.k, strategy=args.strategy, stride=args.stride)
-        m = substring_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
-        print(json.dumps({"mode": "substring", "before": m.rows_before, "after": m.rows_after, "seconds": round(time.time() - t0, 2)}))
-        return 0
+        return pipeline.substring_job(spark, args.input, args.output, args.work_dir, cfg, args.index, args.metrics)
 
-    df = with_doc_id(read_documents(spark, args.input), args.index)
-    if args.index is None:
-        df = df.persist()  # mii stability across reuse
+    raise SystemExit(f"unknown mode {args.mode}")  # pragma: no cover
+
+
+def main(argv=None) -> int:
+    args = build_parser().parse_args(argv)
+    from sparkdedup.session import get_spark
+
+    spark = get_spark(app_name=f"sparkdedup-{args.mode}", checkpoint_dir=args.work_dir + "/ckpt")
+    t0 = time.time()
 
     if args.mode in ("exact", "bloom"):
+        from sparkdedup.config import ExactHashConfig
         from sparkdedup.exact import exact_hash_dedup
+        from sparkdedup.io import partitioned_save, read_documents, with_doc_id
 
+        df = with_doc_id(read_documents(spark, args.input), args.index)
+        if args.index is None:
+            df = df.persist()  # mii stability across reuse
         before = df.count()
         kept = exact_hash_dedup(df, ExactHashConfig(column=args.column, hash_func=args.hash_func))
         after = kept.count()
-    else:  # pragma: no cover
-        raise SystemExit(f"unknown mode {args.mode}")
+        partitioned_save(kept, args.output)
+    else:
+        m = _run_staged(spark, args)
+        before, after = m.rows_before, m.rows_after
 
-    partitioned_save(kept, args.output)
     summary = {"mode": args.mode, "before": before, "after": after, "seconds": round(time.time() - t0, 2)}
-    if args.metrics:
+    if args.metrics and args.mode in ("exact", "bloom"):  # staged jobs write their own
         with open(args.metrics, "w") as f:
             json.dump(summary, f, indent=2)
     print(json.dumps(summary))

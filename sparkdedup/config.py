@@ -147,8 +147,7 @@ class ANNConfig:
     # member vs the bucket's min-id rep) instead of all pairs — bounds
     # the bucket self-join to O(bucket) for mega-buckets at a
     # connectivity-preserving (not exhaustive) recall inside them.
-    # None disables the bound.
-    max_bucket_size: Optional[int] = 4096
+    max_bucket_size: int = 4096
 
     def __post_init__(self) -> None:
         # bucket ids are sign bits packed into a signed int64

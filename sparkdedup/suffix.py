@@ -36,10 +36,12 @@ ids, per-doc state bounded regardless of doc size):
     (start, end) ranges on the fly, and splices — ZERO additional
     shuffle, O(chunk) peak memory per doc.
   - shuffle fallback (huge dup set): per-window (id, off) rows are
-    re-emitted, semi-joined to dup_keys, run-length-compressed into
-    (start, end) islands with a window function, and only the merged
-    ranges (bounded by doc_len/k disjoint runs, 1 for a fully-
-    duplicated doc) are collected per doc.
+    re-emitted and semi-joined to dup_keys; a ``mapInPandas`` sorts
+    bounded buffers of them in NumPy and run-length-merges each into
+    partial (start, end) ranges (the broadcast path's rule), a per-doc
+    window merges the partials, and only the merged ranges (bounded by
+    doc_len/k disjoint runs, 1 for a fully-duplicated doc) are
+    collected per doc.
 
 stride=1 is exact; stride s>1 trades exactness for an s-fold volume
 reduction and still guarantees detection of runs >= k+s-1.
@@ -65,15 +67,7 @@ import pandas as pd
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField, StructType
 
 from sparkdedup.config import SubstringConfig
 from sparkdedup.io import DOC_ID
@@ -82,7 +76,7 @@ _B1 = np.uint64(1000003)  # odd bases -> invertible mod 2^64
 _B2 = np.uint64(998244353)
 
 # 128-bit fingerprints travel as two parallel u64 arrays co-sorted by
-# (h1, h2) — see _sort_key_halves/_member_mask; a structured 16-byte
+# (h1, h2) — see _cosort_key_halves/_member_mask; a structured 16-byte
 # dtype hits numpy's void-comparison slow paths in sort/searchsorted.
 
 
@@ -220,12 +214,6 @@ def _unique_counts(h1: np.ndarray, h2: np.ndarray) -> Tuple[np.ndarray, np.ndarr
     return s1[idx], s2[idx], counts
 
 
-def _sort_key_halves(h1: np.ndarray, h2: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
-    """Co-sort the 128-bit keys by (h1, h2) as two contiguous u64
-    arrays — the broadcast membership container."""
-    return _cosort_key_halves(h1, h2)
-
-
 def _member_mask(k1: np.ndarray, k2: np.ndarray, q1: np.ndarray, q2: np.ndarray) -> np.ndarray:
     """Membership of query keys (q1, q2) in the co-sorted key set
     (k1, k2): vectorized double binary search on the first half, second
@@ -318,15 +306,25 @@ def make_fingerprint_counts(cfg: SubstringConfig):
     return fingerprint_counts
 
 
+def _run_bounds(
+    offs: np.ndarray, k: int, split: Optional[np.ndarray] = None
+) -> Tuple[np.ndarray, np.ndarray]:
+    """(first, last) indices of each run of sorted window offsets whose
+    gaps are <= k; ``split[i]`` also ends a run between items i and i+1."""
+    cut = np.diff(offs) > k
+    if split is not None:
+        cut |= split
+    breaks = np.flatnonzero(cut)
+    return np.concatenate(([0], breaks + 1)), np.append(breaks, offs.size - 1)
+
+
 def merge_offsets_to_ranges(offs: np.ndarray, k: int) -> List[Tuple[int, int]]:
     """Run-length-merge sorted window offsets into disjoint (start, end)
     byte ranges covering the union of [off, off+k)."""
     if offs.size == 0:
         return []
-    breaks = np.nonzero(np.diff(offs) > k)[0]
-    starts = offs[np.concatenate(([0], breaks + 1))]
-    ends = offs[np.concatenate((breaks, [offs.size - 1]))] + k
-    return list(zip(starts.tolist(), ends.tolist()))
+    first, last = _run_bounds(offs, k)
+    return list(zip(offs[first].tolist(), (offs[last] + k).tolist()))
 
 
 def splice_ranges(data: bytes, ranges: Sequence[Tuple[int, int]]) -> str:
@@ -395,11 +393,6 @@ def make_broadcast_splice_mapper(cfg: SubstringConfig, bc_keys):
             yield pdf[mask]
 
     return splice_batches
-
-
-_RANGES_SCHEMA = ArrayType(
-    StructType([StructField("start", LongType()), StructField("end", LongType())])
-)
 
 
 def make_range_splice_mapper(cfg: SubstringConfig):
@@ -527,7 +520,7 @@ def apply_substring_splice(
         if n_dup:
             if pds is None:
                 pds = dup_keys.select("h1", "h2").toPandas()
-            keys = _sort_key_halves(
+            keys = _cosort_key_halves(
                 np.ascontiguousarray(pds["h1"].to_numpy()).view(np.uint64),
                 np.ascontiguousarray(pds["h2"].to_numpy()).view(np.uint64),
             )
@@ -559,77 +552,72 @@ def apply_substring_splice(
     return kept, path
 
 
-# level-1 island compression granularity: offsets per (doc, chunk)
-# group — bounds both the per-group collect_list (<= 64k longs) and the
-# number of level-2 rows per doc (doc_len / 64k for a fully-duplicated
-# doc: a 100 MB doc -> ~1600 island rows through the per-doc sort,
-# instead of 10^8 window rows through one task).
-_ISLAND_CHUNK_BITS = 16
-
-_ISLAND_SCHEMA = ArrayType(
-    StructType([StructField("s", LongType()), StructField("e", LongType())])
-)
+# (id, off) rows per NumPy collapse buffer: bounds the collapse
+# mapper's memory (~16 B/row plus the sort's index) whatever the doc
+# sizes, and sets how many partial ranges reach the per-doc merge (a
+# fully duplicated doc of n windows in offset order -> ~n / this).
+_COLLAPSE_ROWS = 1 << 20
 
 
-def _make_islands_udf(k: int):
-    """array<long> of SORTED offsets -> array<(s, e)> islands, where
-    consecutive offsets with gap <= k merge; s/e are the island's first/
-    last OFFSET (not the byte range) so cross-chunk merging can reapply
-    the exact same gap rule at level 2."""
+def _make_run_collapse(k: int, id_col: str):
+    """mapInPandas fn: (id, off) rows in any order -> one (id, start,
+    end) range per run of a doc's offsets with gaps <= k inside each
+    buffer of ``_COLLAPSE_ROWS`` rows (read when the fn is built)."""
+    limit = _COLLAPSE_ROWS
 
-    @pandas_udf(_ISLAND_SCHEMA)
-    def islands(offs: pd.Series) -> pd.Series:
+    def collapse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from sparkdedup.tuning import tune_worker_memory
 
         tune_worker_memory()
-        out = []
-        for arr in offs:
-            a = np.asarray(arr, dtype=np.int64)
-            cut = np.flatnonzero(np.diff(a) > k) + 1
-            starts = np.concatenate(([0], cut))
-            ends = np.concatenate((cut, [a.size]))
-            out.append(
-                [{"s": int(a[s]), "e": int(a[e - 1])} for s, e in zip(starts, ends)]
-            )
-        return pd.Series(out)
+        ids: List[np.ndarray] = []
+        offs: List[np.ndarray] = []
+        n = 0
 
-    return islands
+        def flush() -> pd.DataFrame:
+            i, o = np.concatenate(ids), np.concatenate(offs)
+            ids.clear()
+            offs.clear()
+            order = np.lexsort((o, i))
+            i, o = i[order], o[order]
+            first, last = _run_bounds(o, k, i[1:] != i[:-1])
+            return pd.DataFrame({id_col: i[first], "start": o[first], "end": o[last] + k})
+
+        for pdf in batches:
+            ids.append(pdf[id_col].to_numpy(dtype=np.int64))
+            offs.append(pdf["off"].to_numpy(dtype=np.int64))
+            n += len(pdf)
+            if n >= limit:
+                yield flush()
+                n = 0
+        if n:
+            yield flush()
+
+    return collapse
 
 
 def _dup_ranges(dup_wins: DataFrame, cfg: SubstringConfig, id_col: str) -> DataFrame:
-    """(id, start, end) merged duplicate byte ranges from per-window
-    (id, off) rows — TWO-LEVEL island compression so no single task ever
-    sorts all windows of a giant doc:
-
-      level 1: groupBy (id, off >> chunk_bits) — each group holds at
-      most 2^chunk_bits offsets; contiguous runs collapse to (first,
-      last) offset islands inside a vectorized UDF.
-      level 2: per-doc window over the ISLANDS (orders of magnitude
-      fewer rows than windows; exactly bounded by doc_len / 2^chunk_bits
-      + sparse-run count) merges across chunk boundaries with the
-      identical gap-<=-k rule, then ranges = [min_off, max_off + k).
-
-    Level-1 islands never overlap across chunks (offset spaces are
-    disjoint), so ordering by island start is total and the lag-based
-    merge is exact."""
+    """(id, start, end) disjoint merged duplicate byte ranges from
+    per-window (id, off) rows. Each mapper buffer collapses to partial
+    ranges in NumPy, so no JVM row or group ever holds a doc's window
+    offsets. Partial ranges from different buffers or shuffle
+    partitions can interleave, so the per-doc merge opens a new range
+    only where ``start`` passes the running max of every earlier
+    ``end`` (offsets are unique per doc, so starts never tie)."""
     from pyspark.sql import Window
 
-    islands_udf = _make_islands_udf(cfg.k)
-    lvl1 = (
-        dup_wins.groupBy(
-            id_col, F.shiftrightunsigned(F.col("off"), _ISLAND_CHUNK_BITS).alias("__chunk__")
-        )
-        .agg(F.array_sort(F.collect_list("off")).alias("__offs__"))
-        .select(id_col, F.explode(islands_udf("__offs__")).alias("__isl__"))
-        .select(id_col, F.col("__isl__.s").alias("s"), F.col("__isl__.e").alias("e"))
+    parts = dup_wins.select(id_col, "off").mapInPandas(
+        _make_run_collapse(cfg.k, id_col),
+        schema=StructType(
+            [StructField(c, LongType()) for c in (id_col, "start", "end")]
+        ),
     )
-    w = Window.partitionBy(id_col).orderBy("s")
-    merged = lvl1.withColumn(
-        "__new__",
-        F.when(F.col("s") - F.lag("e").over(w) > F.lit(cfg.k), F.lit(1)).otherwise(F.lit(0)),
-    ).withColumn("__island__", F.sum("__new__").over(w))
-    return merged.groupBy(id_col, "__island__").agg(
-        F.min("s").alias("start"), (F.max("e") + F.lit(cfg.k)).alias("end")
+    w = Window.partitionBy(id_col).orderBy("start")
+    reach = F.max("end").over(w.rowsBetween(Window.unboundedPreceding, -1))
+    merged = parts.withColumn(
+        "__new__", F.when(F.col("start") > reach, F.lit(1)).otherwise(F.lit(0))
+    ).withColumn("__range__", F.sum("__new__").over(w))
+    return merged.groupBy(id_col, "__range__").agg(
+        F.min("start").alias("start"), F.max("end").alias("end")
     )
 
 

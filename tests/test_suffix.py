@@ -244,3 +244,60 @@ def test_cosort_key_halves_heavy_duplication_fallback():
     s1b, s2b = _cosort_key_halves(h1b, h2b)
     ob = np.lexsort((h2b, h1b))
     assert np.array_equal(s1b, h1b[ob]) and np.array_equal(s2b, h2b[ob])
+
+
+def test_dup_ranges_exact_under_shuffle_join(spark, monkeypatch):
+    """With broadcast joins off, the semi-join shuffles the window rows
+    by fingerprint: a doc's (id, off) rows reach the range collapse out
+    of offset order and spread over partitions, and a tiny collapse
+    buffer splits them further. The merged ranges must still equal the
+    driver-side merge of each doc's duplicated offsets, and the kept
+    rows the broadcast path's."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from sparkdedup import suffix
+
+    corpus = generate_code_files(60, seed=11)
+    df = spark.createDataFrame(corpus).withColumn("__id__", F.col("doc_id"))
+    k = 50
+    res_b = substring_dedup(df, SubstringConfig(column="content", k=k))
+    assert res_b.metrics.path == "broadcast"
+    expect_kept = {r["doc_id"]: r["content"] for r in res_b.kept.select("doc_id", "content").collect()}
+
+    buffer_rows = 64
+    monkeypatch.setattr(suffix, "_COLLAPSE_ROWS", buffer_rows)
+    cfg = SubstringConfig(column="content", k=k, max_broadcast_keys=0)
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1")
+    try:
+        wins = df.select("__id__", "content").mapInPandas(
+            suffix.make_window_rows(cfg, "__id__"),
+            schema=StructType(
+                [StructField("__id__", LongType())] + list(suffix._WIN_SCHEMA.fields)
+            ),
+        )
+        dup_keys = suffix._detect_dup_keys(df, cfg).select("h1", "h2")
+        dup_wins = wins.join(dup_keys, on=["h1", "h2"], how="leftsemi")
+        rows = dup_wins.select("__id__", "off")
+        offs = rows.toPandas()
+        plan = rows._jdf.queryExecution().executedPlan().toString()
+        ranges = suffix._dup_ranges(dup_wins, cfg, "__id__").toPandas()
+        res_s = substring_dedup(df, cfg)
+        assert res_s.metrics.path == "shuffle"
+        got_kept = {r["doc_id"]: r["content"] for r in res_s.kept.select("doc_id", "content").collect()}
+    finally:
+        spark.conf.set(threshold, old)
+
+    assert "SortMergeJoin" in plan and "BroadcastHashJoin" not in plan
+    per_doc = offs.groupby("__id__")["off"]
+    assert per_doc.size().max() > 4 * buffer_rows  # one doc spans several buffers
+    expect = {
+        int(d): suffix.merge_offsets_to_ranges(np.sort(o.to_numpy()), k) for d, o in per_doc
+    }
+    got = {
+        int(d): sorted(zip(g["start"].tolist(), g["end"].tolist()))
+        for d, g in ranges.groupby("__id__")
+    }
+    assert got == expect
+    assert got_kept == expect_kept
