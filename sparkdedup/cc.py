@@ -1,21 +1,23 @@
-"""Connected components via checkpointed DataFrame label propagation.
+"""Connected components: a NumPy solver on the driver, checkpointed
+DataFrame label propagation above ``driver_threshold`` edges.
 
-Replaces the reference's GraphFrames call
-(/root/reference/text_dedup/minhash_spark.py:501-503) and driver-side
-UnionFind (/root/reference/text_dedup/utils/union_find.py:9-98) with an
-iterative min-label propagation over hash joins, with pointer jumping
-(label <- label-of-label each round) for O(log n) convergence — the
-MapReduce CC family of Kiveris et al., "Connected Components in
-MapReduce and Beyond" (public algorithm).
+Replaces the reference's GraphFrames call (minhash_spark.py:501-503)
+and UnionFind (utils/union_find.py:9-98). The driver solver
+(``_hook_compress``) hooks every root under its smallest neighbouring
+root over whole edge arrays, then pointer-jumps to a fixpoint. A root
+outlives a round only as a local minimum of the contracted graph, so
+the root count at least halves every two rounds: ≤ ~2·log2(V) rounds.
 
-Every round is ``localCheckpoint``-ed (eager) to cut lineage; this is
-also the resume point the scale design requires — a failed round
-restarts from materialized blocks, not from the raw corpus. Labels only
-ever decrease, so ``sum(label)`` is a monotone convergence metric and
-equality between rounds is an exact fixpoint test (no extra join to
-diff assignments).
+The distributed path is min-label propagation over hash joins with
+pointer jumping (label <- label-of-label), after Kiveris et al.,
+"Connected Components in MapReduce and Beyond": one or two rounds on
+LSH star graphs, but its rounds grow with the length of a path in
+random id order. Every round is ``localCheckpoint``-ed (eager) to cut
+lineage, so a failed round restarts from materialized blocks. Labels
+only decrease, so equal ``sum(label)`` between rounds is an exact
+fixpoint test.
 
-Output matches GraphFrames' contract: one row per vertex that appears
+Both paths match GraphFrames' contract: one row per vertex that appears
 in the edge list, ``component`` = minimum vertex id of its component.
 """
 
@@ -24,6 +26,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, List, Optional, Tuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,10 +58,11 @@ def connected_components(
 
     Hybrid strategy: LSH candidate graphs are usually a small fraction
     of the corpus (edges ≈ duplicates, not documents), so below
-    ``driver_threshold`` edges the components are solved with a
-    driver-side union-find in one pass — exactly what the reference's
-    non-Spark paths do at full corpus scale (minhash.py:401-412) — and
-    the result is shipped back Arrow-batched. Above the threshold, the
+    ``driver_threshold`` edges are collected once and solved on the
+    driver by the NumPy hook-and-compress solver (``_hook_compress``,
+    ≤ ~2·log2(V) array rounds) — where the reference's non-Spark paths
+    run their UnionFind (minhash.py:401-412) — and the result is
+    shipped back Arrow-batched. Above the threshold, the
     checkpointed distributed label propagation runs. Both produce the
     identical min-id labeling.
 
@@ -98,7 +103,7 @@ def connected_components(
     # recomputes the edge lineage once for the
     # distributed path below. The 4M threshold (64 MB collected) keeps
     # every measured corpus on the single-pass driver side, where the
-    # dict union-find took 6.8 s at 1M edges and 32.3 s at 4M (ROADMAP #3).
+    # NumPy solver takes ~0.4 s at 1M planted edges and ~3 s at 4M.
     try_driver = driver_threshold > 0 if n_edges is None else n_edges <= driver_threshold
     if try_driver:
         pairs = edges.select(src, dst)
@@ -106,8 +111,11 @@ def connected_components(
             pairs = pairs.limit(driver_threshold + 1)
         pdf = pairs.toPandas()
         if len(pdf) <= driver_threshold:
-            stats.n_edges = len(pdf)
-            return _driver_cc_pdf(pdf, src, dst, stats, edges.sparkSession)
+            stats.mode, stats.n_edges = "driver", len(pdf)
+            ids, labels, _ = _hook_compress(pdf[src].to_numpy(np.int64), pdf[dst].to_numpy(np.int64))
+            # an Arrow table ships without pandas' per-column conversion
+            out = pa.table({"id": ids, "component": labels})
+            return edges.sparkSession.createDataFrame(out), stats
 
     # distributed path: the symmetrized union reads the edge lineage
     # again — persist unless the caller already did
@@ -137,8 +145,10 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     # seed sum: lets a seed that is already the fixpoint (pure star
-    # graphs — the common LSH case) converge after ONE confirm round
-    stats.label_sums.append(int(assign.agg(F.sum("comp")).collect()[0][0] or 0))
+    # graphs — the common LSH case) converge after ONE confirm round.
+    # Decimal: a long sum of xxhash64 ids overflows (ANSI mode raises).
+    label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
+    stats.label_sums.append(int(assign.agg(label_sum).collect()[0][0] or 0))
 
     for _ in range(max_iterations):
         stats.iterations += 1
@@ -163,9 +173,9 @@ def connected_components(
             .agg(F.min("comp").alias("comp"))
             .localCheckpoint(eager=True)
         )
-        total = new_assign.agg(F.sum("comp")).collect()[0][0] or 0
+        total = int(new_assign.agg(label_sum).collect()[0][0] or 0)
         prev = stats.label_sums[-1] if stats.label_sums else None
-        stats.label_sums.append(int(total))
+        stats.label_sums.append(total)
         assign = new_assign
         if prev is not None and prev == total:
             break
@@ -173,33 +183,24 @@ def connected_components(
     return assign.select("id", F.col("comp").alias("component")), stats
 
 
-def _driver_cc_pdf(pdf, src: str, dst: str, stats: CCStats, spark):
-    """Union-find over an already-collected pandas edge list."""
-    import pandas as pd
-
-    stats.mode = "driver"
-    parent: dict = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for a, b in zip(pdf[src].to_numpy(), pdf[dst].to_numpy()):
-        ra, rb = find(int(a)), find(int(b))
-        if ra != rb:
-            # union to the smaller root -> labels are component minima
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-
-    ids = sorted(set(pdf[src].tolist()) | set(pdf[dst].tolist()))
-    out = pd.DataFrame({"id": ids, "component": [find(i) for i in ids]})
-    return spark.createDataFrame(out, schema="id long, component long"), stats
+def _hook_compress(a: np.ndarray, b: np.ndarray):
+    """(sorted vertex ids, their component minima, rounds) of the edges
+    ``a[i] — b[i]``. Ids compact to indices in id order and hooks only
+    point to smaller indices, so each root is its component's minimum."""
+    ids, inv = np.unique(np.concatenate([a, b]), return_inverse=True)
+    u, v = inv[: len(a)], inv[len(a):]
+    parent = np.arange(len(ids))
+    rounds = 0
+    while True:
+        u, v = parent[u], parent[v]
+        live = u != v
+        u, v = u[live], v[live]
+        if not len(u):
+            return ids, ids[parent], rounds
+        rounds += 1
+        np.minimum.at(parent, np.maximum(u, v), np.minimum(u, v))
+        while not np.array_equal(jumped := parent[parent], parent):
+            parent = jumped
 
 
 def keep_representatives(docs: DataFrame, assignment: DataFrame, id_col: str) -> DataFrame:

@@ -22,7 +22,8 @@ Architecture (Spark-first, NOT a port):
     by ``count > 1`` BEFORE the join, so AQE can broadcast the
     collision table when it is small and skew-split the join when not.
   * clustering + keep: the shared cc.cluster_keep tail (checkpointed
-    label propagation or driver union-find, no GraphFrames).
+    label propagation or the driver NumPy hook-and-compress solver, no
+    GraphFrames).
 """
 
 from __future__ import annotations

@@ -1,14 +1,16 @@
-"""Connected components vs networkx ground truth — both the driver
-union-find path and the distributed label-propagation path — and the
-known-edge-count hint that skips the sizing probe."""
+"""Connected components vs networkx ground truth and planted minima —
+both the driver NumPy hook-and-compress solver (and its round bound)
+and the distributed label-propagation path — and the known-edge-count
+hint that skips the sizing probe."""
 
 import networkx as nx
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from perfbench.probe import StatusStore
-from sparkdedup.cc import connected_components
+from sparkdedup.cc import _hook_compress, connected_components
 
 
 def _check(spark, edge_list, driver_threshold):
@@ -54,6 +56,86 @@ def test_cc_random_graph(spark, thr):
 def test_cc_merging_clusters(spark, thr):
     # two stars bridged by one edge
     _check(spark, [(2, 1), (3, 1), (12, 11), (13, 11), (11, 3)], thr)
+
+
+@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
+def test_cc_signed_64bit_ids(spark, thr):
+    # xxhash64-derived __id__ values are negative half the time, and ids
+    # above 2**53 lose precision in any float round trip
+    big, neg = 2**53 + 1, -(2**63)
+    _check(spark, [(big + 2, big), (big + 1, big + 2), (-5, neg), (2**63 - 1, -5), (7, -1), (8, 7)], thr)
+
+
+@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
+def test_cc_duplicate_reversed_and_self_loop_edges(spark, thr):
+    # (9, 9) alone: a component of one vertex, labelled with itself
+    _check(spark, [(2, 1), (2, 1), (1, 2), (3, 3), (3, 2), (9, 9), (6, 5), (5, 6), (5, 5)], thr)
+
+
+def test_cc_empty_edges_driver_path(spark):
+    edges = spark.createDataFrame([], schema="src long, dst long")
+    assign, stats = connected_components(edges)
+    assert stats.mode == "driver" and stats.n_edges == 0
+    assert assign.schema.simpleString() == "struct<id:bigint,component:bigint>"
+    assert assign.count() == 0
+
+
+def _planted(seed, n_comps, mega):
+    """Edges over signed 64-bit ids with known components: 2-8-vertex
+    stars at their minimum, paths in random vertex order, and one
+    ``mega``-vertex component (a path with star leaves). Returns the
+    shuffled edges and {id: component minimum}."""
+    rng = np.random.default_rng(seed)
+    sizes = np.append(rng.integers(2, 9, n_comps), mega)
+    ids = np.unique(rng.integers(-(2**63), 2**63 - 1, int(sizes.sum()) * 2, dtype=np.int64))
+    ids = rng.permutation(ids)[: sizes.sum()]
+    src, dst, truth = [], [], {}
+    for i, comp in enumerate(np.split(ids, np.cumsum(sizes)[:-1])):
+        truth.update(dict.fromkeys(comp.tolist(), int(comp.min())))
+        if i == n_comps:  # mega: a path over half, the rest leaves of its minimum
+            path, leaves = np.split(comp, [len(comp) // 2])
+            s = np.append(path[1:], leaves)
+            d = np.append(path[:-1], np.full(len(leaves), path.min()))
+        elif i % 3:  # star at the minimum
+            s, d = comp[comp != comp.min()], np.full(len(comp) - 1, comp.min())
+        else:  # path in random vertex order
+            s, d = comp[1:], comp[:-1]
+        src.append(s)
+        dst.append(d)
+    src, dst = np.concatenate(src), np.concatenate(dst)
+    order = rng.permutation(len(src))
+    return src[order], dst[order], truth
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_hook_compress_planted_minima_and_round_bound(seed):
+    src, dst, truth = _planted(seed, 20_000, 20_000)
+    ids, labels, rounds = _hook_compress(src, dst)
+    assert dict(zip(ids.tolist(), labels.tolist())) == truth
+    # the root count at least halves every two rounds
+    assert rounds <= 2 * np.log2(len(ids)) + 2
+
+
+def test_hook_compress_round_bound_adversarial():
+    rng = np.random.default_rng(5)
+    for n in (2, 3, 100, 4096, 50_000):
+        order = rng.permutation(n)
+        # a path and a random recursive tree, both in random id order
+        shapes = [(order[1:], order[:-1]), (order[1:], order[rng.integers(0, np.arange(1, n))])]
+        for a, b in shapes:
+            ids, labels, rounds = _hook_compress(a.astype(np.int64), b.astype(np.int64))
+            assert (labels == 0).all() and len(ids) == n
+            assert rounds <= 2 * np.log2(n) + 2
+
+
+def test_cc_planted_graph_labels_are_minima_driver(spark):
+    # driver path only: the distributed path's rounds grow with the
+    # length of a path in random id order (ROADMAP #3)
+    src, dst, truth = _planted(3, 30_000, 30_000)
+    edges = spark.createDataFrame(pd.DataFrame({"src": src, "dst": dst}))
+    assign, stats = connected_components(edges)
+    assert stats.mode == "driver" and stats.n_edges == len(src)
+    assert _labels(assign) == truth
 
 
 def test_cc_paths_agree(spark):

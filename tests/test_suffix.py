@@ -185,8 +185,9 @@ def test_substring_no_dups_is_identity(spark):
 def test_substring_shuffle_64mb_fully_duplicated_doc(spark):
     """VERDICT r2 #5 done-criterion: a >=64 MB fully-duplicated doc
     through the SHUFFLE path (max_broadcast_keys=0) must compress to a
-    bounded number of ranges per doc (two-level island merge — never a
-    per-doc sort of 10^8 window rows) and match the broadcast path."""
+    bounded number of ranges per doc (bounded NumPy buffers, run-length
+    merged, then one per-doc merge — never a per-doc sort of 10^8
+    window rows) and match the broadcast path."""
     import pandas as pd
 
     from sparkdedup.suffix import _detect_dup_keys, _dup_ranges, make_window_rows, _WIN_SCHEMA
@@ -199,8 +200,12 @@ def test_substring_shuffle_64mb_fully_duplicated_doc(spark):
     df = spark.createDataFrame(data).withColumn("__id__", F.col("doc_id")).persist()
     cfg = SubstringConfig(column="content", k=100, max_broadcast_keys=0)
 
-    # range compression evidence: both 64 MB docs collapse to ONE range
-    dup_keys = _detect_dup_keys(df, cfg)
+    # range compression evidence: both 64 MB docs collapse to ONE range.
+    # Materialized, the 59 dup keys have a known size and are broadcast
+    # from the start; unmaterialized, Spark first shuffles all 134M
+    # window rows for a sort-merge join that AQE then drops.
+    dup_keys = _detect_dup_keys(df, cfg).persist()
+    dup_keys.count()
     wins = df.select("__id__", "content").mapInPandas(
         make_window_rows(cfg, "__id__"),
         schema=StructType([StructField("__id__", LongType())] + list(_WIN_SCHEMA.fields)),
@@ -215,6 +220,7 @@ def test_substring_shuffle_64mb_fully_duplicated_doc(spark):
     got = {r["doc_id"]: r["content"] for r in res.kept.collect()}
     assert set(got) == {2} and got[2] == "tiny unique survivor doc"
     res.release()
+    dup_keys.unpersist()
     df.unpersist()
 
 
