@@ -15,7 +15,8 @@ LSH star graphs, but its rounds grow with the length of a path in
 random id order. Every round is ``localCheckpoint``-ed (eager) to cut
 lineage, so a failed round restarts from materialized blocks. Labels
 only decrease, so equal ``sum(label)`` between rounds is an exact
-fixpoint test.
+fixpoint test; a run that reaches ``max_iterations`` rounds without it
+raises rather than return unconverged labels.
 
 Both paths match GraphFrames' contract: one row per vertex that appears
 in the edge list, ``component`` = minimum vertex id of its component.
@@ -64,7 +65,10 @@ def connected_components(
     run their UnionFind (minhash.py:401-412) — and the result is
     shipped back Arrow-batched. Above the threshold, the
     checkpointed distributed label propagation runs. Both produce the
-    identical min-id labeling.
+    identical min-id labeling; the distributed path raises
+    ``RuntimeError`` if it finds no fixpoint within ``max_iterations``
+    rounds (its rounds grow with the length of a path in random id
+    order).
 
     A caller that already knows the edge count passes it as
     ``n_edges`` and skips the sizing probe: at or below the threshold
@@ -179,6 +183,11 @@ def connected_components(
         assign = new_assign
         if prev is not None and prev == total:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iterations} label-propagation "
+            f"rounds (label sums {stats.label_sums[-3:]}); raise max_iterations"
+        )
 
     return assign.select("id", F.col("comp").alias("component")), stats
 

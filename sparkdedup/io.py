@@ -68,6 +68,11 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     the scan already yields thousands of splits and this is a no-op, so
     no gratuitous 100TB shuffle; locally it keeps a single-file corpus
     from serializing the signature UDF onto one core.
+
+    Only the lazy ``*_dedup`` paths use it: they write nothing, so a
+    round-robin shuffle of the rows is their one way to widen a narrow
+    scan. The staged jobs split their ids parquet into one file per
+    core instead (``pipeline._stage_ids``) and shuffle no corpus text.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

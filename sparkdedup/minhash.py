@@ -73,6 +73,8 @@ class MinHashMetrics:
     candidate_edges: int = 0
     cc_iterations: int = 0
     rows_after: int = 0
+    # wall seconds of the stages that collect_metrics' counts execute;
+    # empty on the lazy path, which only builds plans
     stage_seconds: Dict[str, float] = field(default_factory=dict)
 
 
@@ -237,7 +239,7 @@ def _signature_dedup(
     if collect_metrics:
         metrics.rows_before = df.count()
         metrics.rows_kept_len_filter = kept_docs.count()
-    metrics.stage_seconds["signatures"] = time.time() - t0
+        metrics.stage_seconds["signatures"] = time.time() - t0
 
     t1 = time.time()
     kept, assignment, cc = cluster_keep(
@@ -247,7 +249,7 @@ def _signature_dedup(
     if collect_metrics:
         metrics.candidate_edges = cc.n_edges
         metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_kept_len_filter
-    metrics.stage_seconds["cluster_keep"] = time.time() - t1
+        metrics.stage_seconds["cluster_keep"] = time.time() - t1
     return DedupResult(kept, assignment, metrics, cached=[with_sig])
 
 

@@ -4,7 +4,9 @@ North-rule requirements (BASELINE.json): resumable from checkpoint with
 per-partition lineage + metrics. Design:
 
   * every job is its mode's edge builder (or corpus-wide aggregation)
-    cut at materialized stage boundaries by ``_stage``: the stable ids,
+    cut at materialized stage boundaries by ``_stage``: the stable ids
+    (written as about one file per core, so every later stage scans
+    them in parallel without a corpus shuffle),
     the fingerprints / encoded vectors, the candidate EDGES, the CC
     ASSIGNMENT, the substring dup-keys and the ccnet line-firsts table
     are each written as parquet under ``work_dir`` with Spark's atomic
@@ -31,7 +33,7 @@ import os
 import sys
 import time
 from dataclasses import asdict, dataclass, field
-from typing import Callable, Dict, Optional, Sequence, Tuple
+from typing import Any, Callable, Dict, Optional, Sequence, Tuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +41,7 @@ from pyspark.sql import functions as F
 
 from sparkdedup.cc import connected_components, keep_representatives
 from sparkdedup.config import CCNetConfig, MinHashConfig, SimHashConfig, SubstringConfig
-from sparkdedup.io import DOC_ID, ensure_parallelism, partitioned_save, read_documents, with_doc_id
+from sparkdedup.io import DOC_ID, partitioned_save, read_documents, with_doc_id
 from sparkdedup.minhash import SIG, make_signature_udf, minhash_edges
 
 
@@ -71,18 +73,20 @@ def _stage(
     build: Callable[[], DataFrame],
     also: Sequence[str] = (),
     count: Callable[[DataFrame], int] = DataFrame.count,
+    options: Callable[[DataFrame], Dict[str, Any]] = lambda df: {},
 ) -> DataFrame:
     """Resume-or-build one materialized stage.
 
     The stage resumes when ``path`` and every side output in ``also``
     (written by ``build`` itself) hold a _SUCCESS marker; otherwise
-    ``build()``'s frame is written to ``path``. Either way the parquet
-    is read back, counted with ``count`` and recorded as
-    ``m.stages[name]``."""
+    ``build()``'s frame is written to ``path`` with the writer options
+    ``options(frame)``. Either way the parquet is read back, counted
+    with ``count`` and recorded as ``m.stages[name]``."""
     t = time.time()
     resumed = all(_complete(p) for p in (path, *also))
     if not resumed:
-        build().write.parquet(path, mode="overwrite")
+        df = build()
+        df.write.options(**options(df)).parquet(path, mode="overwrite")
     m.stages[name] = StageInfo(time.time() - t, resumed=resumed)
     df = spark.read.parquet(path)
     m.stages[name].rows = count(df)
@@ -129,15 +133,40 @@ def _stage_ids(
     """Shared first stage: materialized stable ids (mii is not stable
     across recomputation — reference persists for the same reason,
     minhash_spark.py:419-430 — so ids must be staged before anything
-    joins on them)."""
+    joins on them).
+
+    The ids are written by one narrow job, split into files by
+    ``_one_file_per_core``: each file is its own scan partition, so
+    signatures, fingerprints, pass A, line-firsts and the final join
+    all run with the cluster's parallelism even on a one-file input,
+    and the corpus text is never shuffled to get it (the lazy
+    ``*_dedup`` paths repartition instead, as the reference does).
+    Without ``id_column`` the synthesized ids therefore follow input
+    order: on near-duplicate clusters the number of survivors is the
+    same as with a shuffled input, but which row survives may differ.
+    A work dir staged earlier resumes with the ids it holds."""
     os.makedirs(work_dir, exist_ok=True)
     ids_df = _stage(
         spark, m, "ids", os.path.join(work_dir, "ids.parquet"),
-        lambda: with_doc_id(ensure_parallelism(read_documents(spark, input_path)), id_column),
+        lambda: with_doc_id(read_documents(spark, input_path), id_column),
         count=lambda df: _checked_count(df, id_column),
+        options=_one_file_per_core,
     )
     m.rows_before = m.stages["ids"].rows
     return ids_df
+
+
+def _one_file_per_core(df: DataFrame) -> Dict[str, Any]:
+    """Writer options for a scan with fewer partitions than cores:
+    ``maxRecordsPerFile = ceil(rows / cores)`` (one extra count job),
+    which splits its output into about one equal file per core. A scan
+    that is already as wide as the cluster writes as it is."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    # getNumPartitions() reflects the scan's bin-packing of small files,
+    # which a file count does not; it costs one plan-to-RDD conversion
+    if df.rdd.getNumPartitions() >= cores:
+        return {}
+    return {"maxRecordsPerFile": max(1, -(-df.count() // cores))}
 
 
 def _checked_count(ids_df: DataFrame, id_column: Optional[str]) -> int:

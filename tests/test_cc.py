@@ -48,8 +48,19 @@ def test_cc_random_graph(spark, thr):
     edge_list = [(int(a), int(b)) for a, b in rng.randint(0, n, size=(400, 2)) if a != b]
     stats = _check(spark, edge_list, thr)
     if thr == 0:
-        # pointer jumping => O(log n) rounds even on adversarial shapes
+        # a random graph has short paths; a long path in random id order
+        # needs far more rounds (test_cc_distributed_raises_without_fixpoint)
         assert stats.iterations <= 12
+
+
+def test_cc_distributed_raises_without_fixpoint(spark):
+    # a 40-vertex path in random id order takes far more than two rounds
+    order = np.random.default_rng(3).permutation(40)
+    edges = spark.createDataFrame(
+        [(int(a), int(b)) for a, b in zip(order[1:], order[:-1])], schema="src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="no fixpoint after 2"):
+        connected_components(edges, driver_threshold=0, max_iterations=2)
 
 
 @pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])

@@ -269,6 +269,55 @@ def test_checked_count_detects_id_collisions(spark, tmp_path):
         _stage_ids(spark, p, str(tmp_path / "w"), "key", RunMetrics())
 
 
+def test_ids_stage_splits_a_one_file_corpus_without_a_shuffle(spark, tmp_path, corpus_path):
+    """A one-file corpus scans as one partition. The ids stage writes it
+    narrowly as one file per core, not through a round-robin shuffle of
+    the corpus, and the edges stage's signature scan then runs one task
+    per file."""
+    from perfbench.probe import StatusStore
+    from sparkdedup.minhash import minhash_edges
+    from sparkdedup.pipeline import RunMetrics, _signature_edges, _stage_ids
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores == 8 and spark.read.parquet(corpus_path).rdd.getNumPartitions() == 1
+    work, m = str(tmp_path / "work"), RunMetrics()
+    store = StatusStore(spark)
+
+    def measured(group, fn):
+        store.set_group(group)
+        try:
+            return fn()
+        finally:
+            store.set_group("idle")
+
+    # synthesized ids: a key column adds its uniqueness check, a small
+    # aggregation over the ids alone
+    ids_df = measured("ids_split", lambda: _stage_ids(spark, corpus_path, work, None, m))
+    # the write shuffles nothing; only the two row counts' per-partition
+    # partial sums (tens of bytes each) cross a shuffle, against the
+    # corpus's 168 KB file
+    assert store.totals("ids_split").shuffle_mb * 1e6 < 1000
+    ids_dir = os.path.join(work, "ids.parquet")
+    assert len([f for f in os.listdir(ids_dir) if f.endswith(".parquet")]) >= cores
+    # the small files are not bin-packed back into fewer scan partitions
+    assert ids_df.rdd.getNumPartitions() >= cores
+
+    measured(
+        "ids_split_edges",
+        lambda: _signature_edges(spark, m, work, ids_df, MinHashConfig(), minhash_edges),
+    )
+    store.totals("ids_split_edges")  # drains the listener bus
+    tracker = spark.sparkContext.statusTracker()
+    stages = [s for j in tracker.getJobIdsForGroup("ids_split_edges") for s in tracker.getJobInfo(j).stageIds]
+    # the edges stage's first stage scans ids.parquet through the signature UDF
+    assert tracker.getStageInfo(min(stages)).numTasks >= cores
+
+    resumed = RunMetrics()
+    _stage_ids(spark, corpus_path, work, None, resumed)
+    assert resumed.stages["ids"].resumed
+    assert resumed.stages["ids"].rows == m.stages["ids"].rows == 400
+
+
 def test_entry_release_all_unpersists(spark):
     """VERDICT r2 #8: running entry queries then release_all() must not
     leave the pipelines' persisted frames behind. Asserted on the

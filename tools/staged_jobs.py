@@ -7,7 +7,9 @@ own JVM (``spark.io.compression.codec`` is fixed when the context
 starts; it is passed through ``get_spark``'s ``extra_conf``). Per job
 and run it records Spark jobs, tasks, task seconds and shuffle-write MB
 from the status store, plus the output row count and the sha256 of its
-sorted rows.
+sorted rows. ``stages`` splits those totals by ``pipeline._stage`` stage
+(ids, edges, cc, ...); ``rest`` is the work outside every stage, mostly
+the final write.
 
 Usage: python tools/staged_jobs.py [--out FILE] CODEC...
 Prints (or writes) one JSON document keyed by codec.
@@ -59,8 +61,30 @@ def _digest(spark, path):
     return len(rows), hashlib.sha256(repr(rows).encode()).hexdigest()
 
 
+def _totals(t) -> dict:
+    return {"jobs": t.jobs, "tasks": t.tasks, "task_s": round(t.task_s, 3),
+            "shuffle_mb": round(t.shuffle_mb, 3)}
+
+
+def _group_each_stage(store, pipeline) -> None:
+    """Run each ``pipeline._stage`` call under its own job group,
+    ``<job group>/<stage name>``."""
+    stage = pipeline._stage
+
+    def grouped(spark, m, name, *args, **kwargs):
+        outer = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+        store.set_group(f"{outer}/{name}")
+        try:
+            return stage(spark, m, name, *args, **kwargs)
+        finally:
+            store.set_group(outer)
+
+    pipeline._stage = grouped
+
+
 def one_codec(codec: str) -> dict:
     from perfbench.probe import StatusStore
+    from sparkdedup import pipeline
     from sparkdedup.fixtures import write_code_files
     from sparkdedup.session import get_spark
 
@@ -70,6 +94,7 @@ def one_codec(codec: str) -> dict:
     )
     spark.sparkContext.setLogLevel("ERROR")
     store = StatusStore(spark)
+    _group_each_stage(store, pipeline)
     tmp = tempfile.mkdtemp(prefix="staged-jobs-")
     out = {}
     try:
@@ -82,15 +107,18 @@ def one_codec(codec: str) -> dict:
                 dst = os.path.join(tmp, name, phase)
                 store.set_group(group)
                 try:
-                    run(spark, corpus, dst, work)
+                    m = run(spark, corpus, dst, work)
                 finally:
                     store.set_group("idle")
-                t = store.totals(group)
-                rows, sha = _digest(spark, dst)
-                out[name][phase] = {
-                    "jobs": t.jobs, "tasks": t.tasks, "task_s": round(t.task_s, 3),
-                    "shuffle_mb": round(t.shuffle_mb, 3), "rows": rows, "sha256": sha,
+                # "write" is timed by the job itself, outside every _stage
+                stages = {k: _totals(store.totals(f"{group}/{k}")) for k in m.stages if k != "write"}
+                stages["rest"] = _totals(store.totals(group))
+                total = {
+                    k: round(sum(s[k] for s in stages.values()), 3)
+                    for k in ("jobs", "tasks", "task_s", "shuffle_mb")
                 }
+                rows, sha = _digest(spark, dst)
+                out[name][phase] = {**total, "rows": rows, "sha256": sha, "stages": stages}
     finally:
         spark.stop()
         shutil.rmtree(tmp, ignore_errors=True)
