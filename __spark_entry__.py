@@ -107,7 +107,7 @@ def q_minhash_dedup_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.minhash import minhash_dedup
 
     df = with_doc_id(_docs(spark, sf_dir), id_column="doc_id")
-    res = _track(minhash_dedup(df, MinHashConfig(column="text"), collect_metrics=False))
+    res = _track(minhash_dedup(df, MinHashConfig(column="text")))
     return res.kept.select("doc_id", "lang", "source")
 
 
@@ -117,7 +117,7 @@ def q_simhash_dedup_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.simhash import simhash_dedup
 
     df = with_doc_id(_docs(spark, sf_dir), id_column="doc_id")
-    res = _track(simhash_dedup(df, SimHashConfig(column="text"), collect_metrics=False))
+    res = _track(simhash_dedup(df, SimHashConfig(column="text")))
     return res.kept.select("doc_id", "lang", "source")
 
 
@@ -212,7 +212,7 @@ def q_minhash_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.minhash import minhash_dedup
 
     df = with_doc_id(_docs(spark, sf_dir), id_column="doc_id")
-    res = _track(minhash_dedup(df, MinHashConfig(column="text"), collect_metrics=False))
+    res = _track(minhash_dedup(df, MinHashConfig(column="text")))
     mh = res.assignment.select(F.col("id").alias("doc_id"), F.col("component").alias("mc"))
     _, truth = _jaccard_truth(spark, sf_dir)
     j = truth.withColumnRenamed("component", "tc").join(mh, on="doc_id", how="full")
@@ -252,7 +252,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.suffix import substring_dedup
 
     df = with_doc_id(_docs(spark, sf_dir), id_column="doc_id")
-    res = _track(substring_dedup(df, SubstringConfig(column="text", k=30), collect_metrics=False))
+    res = _track(substring_dedup(df, SubstringConfig(column="text", k=30)))
     return res.kept.select("doc_id", F.col("text").alias("deduped_text"))
 
 
@@ -302,7 +302,7 @@ def q_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.jaccard import jaccard_dedup
 
     df = with_doc_id(_docs(spark, sf_dir), id_column="doc_id")
-    res = _track(jaccard_dedup(df, MinHashConfig(column="text", threshold=0.7), collect_metrics=False))
+    res = _track(jaccard_dedup(df, MinHashConfig(column="text", threshold=0.7)))
     return res.kept.select("doc_id", "lang")
 
 
@@ -424,7 +424,7 @@ def q_ann_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.config import ANNConfig
 
     embs = _embs(spark, sf_dir)
-    res = ann_dedup(embs, _EMB_DIM, ANNConfig(threshold=0.35), exact=True, collect_metrics=False)
+    res = ann_dedup(embs, _EMB_DIM, ANNConfig(threshold=0.35), exact=True)
     return res.kept.select("vec_id")
 
 
@@ -438,10 +438,10 @@ def q_ann_dedup_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sparkdedup.config import ANNConfig
 
     embs = _embs(spark, sf_dir)
-    exact = ann_dedup(embs, _EMB_DIM, ANNConfig(threshold=0.35), exact=True, collect_metrics=False)
+    exact = ann_dedup(embs, _EMB_DIM, ANNConfig(threshold=0.35), exact=True)
     ivf = ann_dedup(
         embs, _EMB_DIM, ANNConfig(threshold=0.35), exact=False,
-        n_centroids=8, n_probe=4, collect_metrics=False,
+        n_centroids=8, n_probe=4,
     )
     j = (
         exact.kept.select("vec_id", F.lit(1).alias("e"))

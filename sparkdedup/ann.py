@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
-from typing import List, Optional
+from typing import Any, Dict, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType, LongType
 
-from sparkdedup.cc import DedupResult, cluster_keep, connected_components
+from sparkdedup.cc import DedupResult, RunMetrics, cluster_keep, connected_components
 from sparkdedup.config import ANNConfig
 
 # cap on the per-block (queries x cell) sims matrix inside the cogrouped
@@ -673,20 +673,6 @@ def near_dup_pairs(
 # --- ANN dedup (adaptive-k, ann_unisim semantics) --------------------------
 
 
-@dataclass
-class ANNDedupMetrics:
-    rows_before: int = 0
-    n_distinct: int = 0  # distinct-vector reps after identical collapse
-    rounds: int = 0
-    k_final: int = 0
-    match_edges: int = 0
-    cc_iterations: int = 0
-    rows_after: int = 0
-    # saturated searchers retired by between-round component
-    # contraction (dense near-identical clusters; see ann_match_edges)
-    contractions: int = 0
-
-
 def ann_match_edges(
     vectors: DataFrame,
     dim: int,
@@ -695,12 +681,14 @@ def ann_match_edges(
     n_centroids: Optional[int] = None,
     n_probe: Optional[int] = None,
     k0: int = 20,
-    metrics: Optional[ANNDedupMetrics] = None,
+    facts: Optional[Dict[str, Any]] = None,
 ) -> DataFrame:
     """(src, dst) deduped match edges >= cfg.threshold — the candidate
     graph the CC/cluster stage consumes (and the staged ann_job
     checkpoints). exact=True: all-pairs threshold join; else the
-    adaptive-k loop over the IVF index (see ann_dedup).
+    adaptive-k loop over the IVF index (see ann_dedup). The loop's
+    ``rounds``, ``k_final``, ``n_distinct`` and ``contractions`` (saturated
+    searchers retired by component contraction) go to ``facts``.
 
     Identical vectors are collapsed to a min-id representative BEFORE
     the adaptive-k loop (same move as the SRP path,
@@ -731,12 +719,10 @@ def ann_match_edges(
     union-find) rather than the raw edge set."""
     from pyspark.sql import Window
 
-    if metrics is None:
-        metrics = ANNDedupMetrics()
+    facts = {} if facts is None else facts
     if exact:
         pairs = near_dup_pairs(vectors, dim, cfg, exact=True)
-        metrics.rounds = 1
-        metrics.k_final = 0
+        facts.update(rounds=1, k_final=0)
         return pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
 
     tagged = (
@@ -753,7 +739,7 @@ def ann_match_edges(
     # materialization (the loop re-checkpoints `remaining` per round)
     remaining = tagged.filter(F.col("query_id") == F.col("rep")).select("query_id", "qv")
     n_total = remaining.count()
-    metrics.n_distinct = n_total
+    facts.update(n_distinct=n_total, rounds=0, contractions=0)
     index = build_ivf_index(
         remaining.select(
             F.col("query_id").alias(cfg.id_column), F.col("qv").alias(cfg.vector_column)
@@ -765,8 +751,8 @@ def ann_match_edges(
     k = k0
     accepted: List[DataFrame] = []
     while True:
-        metrics.rounds += 1
-        metrics.k_final = k
+        facts["rounds"] += 1
+        facts["k_final"] = k
         # the query side here is the (still-saturated subset of the)
         # CORPUS — never broadcast it; round 1 it IS the corpus
         res = (
@@ -842,7 +828,7 @@ def ann_match_edges(
             eager=True
         )
         n_remaining = remaining.count()
-        metrics.contractions += n_sat - n_remaining
+        facts["contractions"] += n_sat - n_remaining
         if n_remaining == 0:
             break
         if n_remaining <= _EXHAUSTIVE_TAIL_QUERIES:
@@ -870,7 +856,6 @@ def ann_dedup(
     n_centroids: Optional[int] = None,
     n_probe: Optional[int] = None,
     k0: int = 20,
-    collect_metrics: bool = True,
 ) -> DedupResult:
     """Embedding near-dup DEDUP: all >= threshold matches -> connected
     components -> keep the min-id representative per cluster.
@@ -888,14 +873,6 @@ def ann_dedup(
     IVF index built ONCE; each round touches only still-saturated docs,
     so the k-doubling loop converges in O(log max_cluster) rounds.
     """
-    metrics = ANNDedupMetrics()
-    if collect_metrics:
-        metrics.rows_before = vectors.count()
-
-    edges = ann_match_edges(vectors, dim, cfg, exact, n_centroids, n_probe, k0, metrics)
-    kept, assignment, cc = cluster_keep(vectors, edges, cfg.id_column, collect_metrics)
-    metrics.cc_iterations = cc.iterations
-    if collect_metrics:
-        metrics.match_edges = cc.n_edges
-        metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_before
-    return DedupResult(kept, assignment, metrics)
+    m = RunMetrics("ann")
+    edges = ann_match_edges(vectors, dim, cfg, exact, n_centroids, n_probe, k0, m.facts)
+    return cluster_keep(vectors, edges, cfg.id_column, m)

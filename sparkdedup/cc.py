@@ -20,12 +20,15 @@ raises rather than return unconverged labels.
 
 Both paths match GraphFrames' contract: one row per vertex that appears
 in the edge list, ``component`` = minimum vertex id of its component.
+
+The module also holds the lazy ``*_dedup`` tail (``cluster_keep``) and
+``RunMetrics``, the one metrics record lazy and staged runs both return.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Any, List, Optional, Tuple
+from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -74,7 +77,7 @@ def connected_components(
     ``n_edges`` and skips the sizing probe: at or below the threshold
     the edges are collected with a plain ``toPandas()`` (one job, no
     shuffle); above it the distributed path starts at once. Without
-    the hint (the lazy ``*_dedup`` fast path), the sizing probe and the
+    the hint (every lazy ``*_dedup``), the sizing probe and the
     driver-path edge collection are ONE job: ``limit(threshold+1)
     .toPandas()`` both answers "does the edge list fit?" and, when it
     does, already holds the whole list. That job is not shuffle-free:
@@ -228,49 +231,64 @@ def keep_representatives(docs: DataFrame, assignment: DataFrame, id_col: str) ->
 
 
 def cluster_keep(
-    docs: DataFrame, edges: DataFrame, id_col: str, collect_metrics: bool
-) -> Tuple[DataFrame, DataFrame, CCStats]:
+    docs: DataFrame, edges: DataFrame, id_col: str, m: RunMetrics, cached: Sequence[DataFrame] = ()
+) -> DedupResult:
     """The near-dup tail every ``*_dedup`` shares: candidate edges ->
     connected components -> keep each component's representative.
 
-    collect_metrics=True persists the edges so their count
-    (``CCStats.n_edges``) and the CC pass share one materialization,
-    and hands that count to CC, which then skips its sizing probe.
-    Otherwise the edges stay lazy: the driver CC path consumes the
-    lineage in one collect job and reports ``n_edges`` itself, so the
-    empty-graph exit costs no extra probe. On an empty graph CC is
-    skipped (count known) or its result ignored, ``docs`` is returned
-    as is, and the assignment is an empty lineage-free frame (early
-    exit of minhash_spark.py:472-483).
+    The edges stay lazy: the driver CC path consumes their lineage in
+    one collect job and reports the edge count itself, so the
+    empty-graph exit costs no extra probe. On an empty graph ``docs``
+    is kept as is and the assignment is an empty lineage-free frame
+    (early exit of minhash_spark.py:472-483). CC's mode, iterations and
+    known edge count go to ``m.facts``; ``cached`` are the caller's
+    persisted frames, for ``DedupResult.release``."""
+    assignment, stats = connected_components(edges)
+    m.record_cc(stats)
+    if stats.n_edges == 0:
+        empty = docs.sparkSession.createDataFrame([], "id long, component long")
+        return DedupResult(docs, empty, m, list(cached))
+    return DedupResult(keep_representatives(docs, assignment, id_col), assignment, m, list(cached))
 
-    Returns (kept rows, DataFrame[id, component], CCStats)."""
-    n_edges = None
-    if collect_metrics:
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        n_edges = edges.count()
-    try:
-        if n_edges == 0:
-            stats = CCStats(mode="empty", n_edges=0)
-        else:
-            assignment, stats = connected_components(edges, n_edges=n_edges)
-            if n_edges is not None:
-                stats.n_edges = n_edges
-        if stats.n_edges == 0:
-            empty = docs.sparkSession.createDataFrame([], "id long, component long")
-            return docs, empty, stats
-        return keep_representatives(docs, assignment, id_col), assignment, stats
-    finally:
-        if collect_metrics:
-            edges.unpersist()
+
+@dataclass
+class StageInfo:
+    seconds: float = 0.0
+    rows: int = -1
+    resumed: bool = False
+
+
+@dataclass
+class RunMetrics:
+    """One run's metrics record. A staged ``*_job`` fills every field;
+    a lazy ``*_dedup`` materializes no stage and counts nothing, so its
+    ``stages`` stay empty and its row counts stay -1 ("not counted").
+    ``facts`` holds what a run learns without an extra job: CC's mode,
+    iterations and edge count when known (``cc_*``), the ANN loop's
+    ``rounds``/``k_final``/``n_distinct``/``contractions`` and the
+    substring ``splice_path``."""
+
+    mode: str = "minhash"
+    stages: Dict[str, StageInfo] = field(default_factory=dict)
+    partition_rows: Dict[str, int] = field(default_factory=dict)
+    rows_before: int = -1
+    rows_after: int = -1
+    facts: Dict[str, Any] = field(default_factory=dict)
+
+    def record_cc(self, stats: CCStats) -> None:
+        self.facts.update(cc_mode=stats.mode, cc_iterations=stats.iterations)
+        if stats.n_edges is not None:
+            self.facts["cc_edges"] = stats.n_edges
 
 
 @dataclass
 class DedupResult:
-    """Output of a near-dup ``*_dedup``."""
+    """Output of a lazy ``*_dedup``."""
 
     kept: DataFrame  # surviving rows (input schema)
-    assignment: DataFrame  # (id, component) for every edge-touched row
-    metrics: Any  # the mode's *Metrics dataclass
+    # (id, component) for every edge-touched row; None for substring
+    assignment: Optional[DataFrame]
+    metrics: RunMetrics
     cached: List[DataFrame] = field(default_factory=list)
 
     def release(self) -> None:

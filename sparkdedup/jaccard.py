@@ -77,14 +77,12 @@ def jaccard_dedup(
     df: DataFrame,
     cfg: MinHashConfig = MinHashConfig(),
     id_col: str = DOC_ID,
-    collect_metrics: bool = True,
 ) -> DedupResult:
     """MinHash-LSH candidates + exact word-n-gram Jaccard verification.
 
     Keeps the min-id representative of each verified component. Docs
-    below min_length are dropped (same as minhash_dedup). The metrics
-    are a MinHashMetrics whose ``candidate_edges`` counts the VERIFIED
-    edges.
+    below min_length are dropped (same as minhash_dedup). The metrics'
+    ``cc_edges`` fact, when CC knows it, counts the VERIFIED edges.
 
     Verification runs on xxhash64-hashed shingles: the measured Jaccard
     of a pair differs from the string-set value only if two distinct
@@ -92,5 +90,5 @@ def jaccard_dedup(
     per document for |s| distinct shingles (~5e-12 at 10k shingles).
     """
     return _signature_dedup(
-        df, cfg, id_col, collect_metrics, lambda s: jaccard_verified_edges(s, cfg, id_col)
+        df, cfg, id_col, "jaccard", lambda s: jaccard_verified_edges(s, cfg, id_col)
     )

@@ -28,8 +28,7 @@ Architecture (Spark-first, NOT a port):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
-from typing import Callable, Dict, List, Optional
+from typing import Callable, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -39,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BinaryType
 
-from sparkdedup.cc import COMPONENT, DedupResult, cluster_keep  # noqa: F401 (COMPONENT re-exported)
+from sparkdedup.cc import COMPONENT, DedupResult, RunMetrics, cluster_keep  # noqa: F401 (COMPONENT re-exported)
 from sparkdedup.config import MinHashConfig
 from sparkdedup.hashing import generate_permutations
 from sparkdedup.io import DOC_ID
@@ -64,18 +63,6 @@ _HASH_CONFIG = {
 _PERMUTE_CHUNK = 1_024
 
 SIG = "__sig__"
-
-
-@dataclass
-class MinHashMetrics:
-    rows_before: int = 0
-    rows_kept_len_filter: int = 0
-    candidate_edges: int = 0
-    cc_iterations: int = 0
-    rows_after: int = 0
-    # wall seconds of the stages that collect_metrics' counts execute;
-    # empty on the lazy path, which only builds plans
-    stage_seconds: Dict[str, float] = field(default_factory=dict)
 
 
 def _sha1_shingle_hashes(texts: List[str], cfg: MinHashConfig) -> List[Optional[np.ndarray]]:
@@ -219,55 +206,34 @@ def _signature_dedup(
     df: DataFrame,
     cfg: MinHashConfig,
     id_col: str,
-    collect_metrics: bool,
+    mode: str,
     edges_of: Callable[[DataFrame], DataFrame],
 ) -> DedupResult:
     """Signatures -> length filter -> ``edges_of(kept docs)`` -> the
     shared cluster-and-keep tail; minhash_dedup and jaccard_dedup differ
     only in ``edges_of``."""
-    import time
-
     from sparkdedup.io import ensure_parallelism
 
-    metrics = MinHashMetrics()
-    t0 = time.time()
-    df = ensure_parallelism(df)
-    with_sig = df.withColumn(SIG, make_signature_udf(cfg)(F.col(cfg.column))).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    with_sig = ensure_parallelism(df).withColumn(
+        SIG, make_signature_udf(cfg)(F.col(cfg.column))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     kept_docs = with_sig.filter(F.col(SIG).isNotNull())
-    if collect_metrics:
-        metrics.rows_before = df.count()
-        metrics.rows_kept_len_filter = kept_docs.count()
-        metrics.stage_seconds["signatures"] = time.time() - t0
-
-    t1 = time.time()
-    kept, assignment, cc = cluster_keep(
-        kept_docs.drop(SIG), edges_of(kept_docs), id_col, collect_metrics
+    return cluster_keep(
+        kept_docs.drop(SIG), edges_of(kept_docs), id_col, RunMetrics(mode), [with_sig]
     )
-    metrics.cc_iterations = cc.iterations
-    if collect_metrics:
-        metrics.candidate_edges = cc.n_edges
-        metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_kept_len_filter
-        metrics.stage_seconds["cluster_keep"] = time.time() - t1
-    return DedupResult(kept, assignment, metrics, cached=[with_sig])
 
 
 def minhash_dedup(
     df: DataFrame,
     cfg: MinHashConfig = MinHashConfig(),
     id_col: str = DOC_ID,
-    collect_metrics: bool = True,
 ) -> DedupResult:
     """End-to-end MinHash-LSH dedup.
 
     ``df`` must already carry a stable long id column (``io.with_doc_id``
     + persist if synthesized). Returns surviving rows: docs below
     min_length are dropped; of each near-dup component the minimum-id
-    row survives (minhash_spark.py:423-428, 524-528).
-
-    collect_metrics=False skips the stage-count actions (each is a full
-    pass) — the fast path for production/bench runs (see
-    cc.cluster_keep for how the empty-graph exit stays free there).
+    row survives (minhash_spark.py:423-428, 524-528). Nothing is
+    counted: see cc.cluster_keep for how the empty-graph exit stays free.
     """
-    return _signature_dedup(df, cfg, id_col, collect_metrics, lambda s: minhash_edges(s, id_col))
+    return _signature_dedup(df, cfg, id_col, "minhash", lambda s: minhash_edges(s, id_col))

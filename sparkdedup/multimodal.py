@@ -14,7 +14,7 @@ At 100 TB the rules that matter here:
   * decode fan-out (video -> frames) multiplies rows — cap frames per
     asset and repartition by byte size BEFORE the UDF so one executor
     doesn't get all the 4K videos (spark.sql.files.maxPartitionBytes
-    handles the scan; ``rebalance_by_bytes`` handles post-shuffle).
+    handles the scan).
 """
 
 from __future__ import annotations
@@ -183,10 +183,3 @@ def exact_asset_dedup(assets: DataFrame) -> DataFrame:
     firsts = hashed.groupBy("__h__").agg(F.min("asset_id").alias("asset_id"))
     return hashed.join(firsts, on=["__h__", "asset_id"], how="inner").drop("__h__")
 
-
-def rebalance_by_bytes(assets: DataFrame, target_partition_bytes: int = 128 << 20) -> DataFrame:
-    """Spread large payloads before expensive decode UDFs: range-ish
-    rebalance using payload length as weight via repartitionByRange on
-    a salted size bucket."""
-    with_size = assets.withColumn("__sz__", F.length("payload"))
-    return with_size.repartitionByRange(F.col("__sz__"), F.col("asset_id")).drop("__sz__")

@@ -20,7 +20,13 @@ per-partition lineage + metrics. Design:
   * the four near-dup jobs share one tail: CC over the staged edges,
     then cc.keep_representatives, then the partitioned write;
   * per-stage wall times, resume flags and row counts + per-partition
-    output row counts are written as one metrics JSON artifact.
+    output row counts are written as one metrics JSON artifact, with
+    the run's ``facts``: CC's mode, iterations and edge count, the ANN
+    loop's rounds, k and contractions, and the substring splice path —
+    each recorded by the stage that learns it, so a resumed stage adds
+    none. ``_stage`` is the only code that materializes a stage: the
+    lazy ``*_dedup`` functions return the same ``RunMetrics`` record
+    with no stages, uncounted rows and the same facts.
 
 The CC loop itself additionally localCheckpoints every round
 (sparkdedup.cc), bounding recomputation within the stage.
@@ -32,33 +38,17 @@ import json
 import os
 import sys
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict
 from typing import Any, Callable, Dict, Optional, Sequence, Tuple
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkdedup.cc import connected_components, keep_representatives
+from sparkdedup.cc import RunMetrics, StageInfo, connected_components, keep_representatives
 from sparkdedup.config import CCNetConfig, MinHashConfig, SimHashConfig, SubstringConfig
 from sparkdedup.io import DOC_ID, partitioned_save, read_documents, with_doc_id
 from sparkdedup.minhash import SIG, make_signature_udf, minhash_edges
-
-
-@dataclass
-class StageInfo:
-    seconds: float = 0.0
-    rows: int = -1
-    resumed: bool = False
-
-
-@dataclass
-class RunMetrics:
-    mode: str = "minhash"
-    stages: Dict[str, StageInfo] = field(default_factory=dict)
-    partition_rows: Dict[str, int] = field(default_factory=dict)
-    rows_before: int = -1
-    rows_after: int = -1
 
 
 def _complete(path: str) -> bool:
@@ -121,6 +111,7 @@ def _write_metrics(m: RunMetrics, metrics_path: Optional[str]) -> None:
                 "rows_after": m.rows_after,
                 "stages": {k: asdict(v) for k, v in m.stages.items()},
                 "partition_rows": m.partition_rows,
+                "facts": m.facts,
             },
             f,
             indent=2,
@@ -239,11 +230,15 @@ def _cluster_write(
     metrics_path: Optional[str],
 ) -> RunMetrics:
     """The near-dup jobs' tail: staged CC assignment -> keep each
-    component's representative -> write."""
-    assignment = _stage(
-        spark, m, "cc", os.path.join(work_dir, "assignment.parquet"),
-        lambda: connected_components(edges, n_edges=m.stages["edges"].rows)[0],
-    )
+    component's representative -> write. CC's facts are recorded only
+    when the ``cc`` stage runs, not when it resumes."""
+
+    def cc() -> DataFrame:
+        assignment, stats = connected_components(edges, n_edges=m.stages["edges"].rows)
+        m.record_cc(stats)
+        return assignment
+
+    assignment = _stage(spark, m, "cc", os.path.join(work_dir, "assignment.parquet"), cc)
     t = time.time()
     kept = keep_representatives(docs, assignment, id_col)
     return _finalize(spark, kept, output_path, m, metrics_path, t)
@@ -258,7 +253,7 @@ def _finalize(
     out = spark.read.parquet(output_path)
     pid_rows = out.groupBy(F.spark_partition_id().alias("pid")).count().collect()
     m.partition_rows = {str(r["pid"]): r["count"] for r in pid_rows}
-    m.rows_after = sum(m.partition_rows.values())
+    m.rows_after = m.stages["write"].rows = sum(m.partition_rows.values())
     _write_metrics(m, metrics_path)
     return m
 
@@ -330,7 +325,7 @@ def substring_job(
         lambda: _detect_dup_keys(ids_df, cfg),
     )
     t = time.time()
-    kept, _path = apply_substring_splice(
+    kept, m.facts["splice_path"] = apply_substring_splice(
         ids_df, dup_keys, cfg, DOC_ID, n_dup=m.stages["dup_keys"].rows
     )
     return _finalize(spark, kept, output_path, m, metrics_path, t)
@@ -449,7 +444,8 @@ def ann_job(
     edges = _stage(
         spark, m, "edges", os.path.join(work_dir, "edges.parquet"),
         lambda: ann_match_edges(
-            vectors, dim, cfg, exact=False, n_centroids=n_centroids, n_probe=n_probe, k0=k0
+            vectors, dim, cfg, exact=False, n_centroids=n_centroids, n_probe=n_probe, k0=k0,
+            facts=m.facts,
         ),
     )
     # text mode outputs the surviving DOCUMENTS, without their embedding

@@ -40,7 +40,6 @@ Spark-first design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from itertools import permutations as iter_permutations
 from typing import List, Optional, Sequence, Tuple
 
@@ -52,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import LongType, StructField, StructType
 
-from sparkdedup.cc import DedupResult, cluster_keep
+from sparkdedup.cc import DedupResult, RunMetrics, cluster_keep
 from sparkdedup.config import SimHashConfig
 from sparkdedup.io import DOC_ID
 from sparkdedup.shingle import char_shingle_hashes64_batch, char_shingle_hashes128_batch, fold_segments
@@ -271,16 +270,6 @@ def make_fingerprint_udf(cfg: SimHashConfig):
 # --- pipeline ------------------------------------------------------------
 
 
-@dataclass
-class SimHashMetrics:
-    rows_before: int = 0
-    rows_with_fp: int = 0
-    distinct_fps: int = 0
-    candidate_edges: int = 0
-    cc_iterations: int = 0
-    rows_after: int = 0
-
-
 def _fp_cols(cfg: SimHashConfig) -> List[Column]:
     if cfg.f == 64:
         return [F.col(FP)]
@@ -400,28 +389,16 @@ def simhash_dedup(
     df: DataFrame,
     cfg: SimHashConfig = SimHashConfig(),
     id_col: str = DOC_ID,
-    collect_metrics: bool = True,
 ) -> DedupResult:
     """End-to-end SimHash dedup; min-id representative of each cluster
     survives (cluster==index filter, simhash.py:447-452). Docs too
     short to fingerprint are kept as unique."""
     from sparkdedup.io import ensure_parallelism
 
-    metrics = SimHashMetrics()
-    df = ensure_parallelism(df)
-    with_fp = df.withColumn(FP, make_fingerprint_udf(cfg)(F.col(cfg.column))).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    with_fp = ensure_parallelism(df).withColumn(
+        FP, make_fingerprint_udf(cfg)(F.col(cfg.column))
+    ).persist(StorageLevel.MEMORY_AND_DISK)
     fps = with_fp.filter(_fp_not_null(cfg)).select(F.col(id_col), FP)
-    if collect_metrics:
-        metrics.rows_before = df.count()
-        metrics.rows_with_fp = fps.count()
-
-    kept, assignment, cc = cluster_keep(
-        with_fp.drop(FP), simhash_edges(fps, cfg, id_col), id_col, collect_metrics
+    return cluster_keep(
+        with_fp.drop(FP), simhash_edges(fps, cfg, id_col), id_col, RunMetrics("simhash"), [with_fp]
     )
-    metrics.cc_iterations = cc.iterations
-    if collect_metrics:
-        metrics.candidate_edges = cc.n_edges
-        metrics.rows_after = kept.count() if cc.n_edges else metrics.rows_before
-    return DedupResult(kept, assignment, metrics, cached=[with_fp])

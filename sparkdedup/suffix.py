@@ -59,7 +59,6 @@ table with doc ids (~24 B/corpus-byte ≈ 2 PB of shuffle).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
 from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
@@ -69,6 +68,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from sparkdedup.cc import DedupResult, RunMetrics
 from sparkdedup.config import SubstringConfig
 from sparkdedup.io import DOC_ID
 
@@ -458,29 +458,6 @@ def make_window_rows(cfg: SubstringConfig, id_col: str):
     return window_rows
 
 
-@dataclass
-class SubstringMetrics:
-    rows_before: int = 0
-    duplicated_windows: int = 0
-    dup_keys: int = 0
-    rows_after: int = 0
-    path: str = ""  # "broadcast" | "shuffle"
-
-
-@dataclass
-class SubstringResult:
-    kept: DataFrame
-    metrics: SubstringMetrics
-    cached: List[DataFrame] = None  # type: ignore[assignment]
-
-    def release(self) -> None:
-        """Unpersist pipeline-cached DataFrames. Call once the outputs
-        are written/consumed; materializing them afterwards recomputes."""
-        for df in self.cached or []:
-            df.unpersist()
-        self.cached = []
-
-
 def _detect_dup_keys(df: DataFrame, cfg: SubstringConfig) -> DataFrame:
     """PASS A: duplicated 128-bit window fingerprints with their corpus
     occurrence counts. Shuffle volume = distinct fingerprints/partition."""
@@ -625,36 +602,19 @@ def substring_dedup(
     df: DataFrame,
     cfg: SubstringConfig = SubstringConfig(),
     id_col: str = DOC_ID,
-    collect_metrics: bool = True,
-) -> SubstringResult:
+) -> DedupResult:
     """Remove every byte range (length >= k) whose content appears more
-    than once in the corpus; drop emptied docs."""
+    than once in the corpus; drop emptied docs. The result has no
+    assignment; its metrics record the ``splice_path``."""
     from sparkdedup.io import ensure_parallelism
 
-    metrics = SubstringMetrics()
     df = ensure_parallelism(df).persist(StorageLevel.MEMORY_AND_DISK)
-    if collect_metrics:
-        metrics.rows_before = df.count()
-
     dup_keys = _detect_dup_keys(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
-    if collect_metrics:
-        stats = dup_keys.agg(
-            F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("c"), F.lit(0)).alias("w")
-        ).first()
-        n_dup, metrics.duplicated_windows = int(stats["n"]), int(stats["w"])
-        metrics.dup_keys = n_dup
-    else:
-        # fast path: skip the count/sum action — apply_substring_splice
-        # fuses the size probe with the broadcast-path key collection
-        # into one job (metrics.dup_keys stays 0 here by design)
-        n_dup = None
-
-    kept, metrics.path = apply_substring_splice(df, dup_keys, cfg, id_col, n_dup=n_dup)
-    cached = [df]
-    if metrics.path == "broadcast":
+    # n_dup unknown: apply_substring_splice fuses the size probe with
+    # the broadcast-path key collection into one job
+    kept, path = apply_substring_splice(df, dup_keys, cfg, id_col)
+    m = RunMetrics("substring", facts={"splice_path": path})
+    if path == "broadcast":
         dup_keys.unpersist()  # collected to driver; drop the cache now
-    if collect_metrics:
-        metrics.rows_after = kept.count()
-    if metrics.path == "shuffle":
-        cached.append(dup_keys)
-    return SubstringResult(kept, metrics, cached=cached)
+        return DedupResult(kept, None, m, [df])
+    return DedupResult(kept, None, m, [df, dup_keys])

@@ -42,14 +42,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(F.length(col) == 0, F.lit(0.0)).otherwise(n_punct / F.length(col))
 
 
-def stopword_ratio(col: Column, stopwords: List[str] | None = None) -> Column:
-    words = stopwords or LANG_MARKERS["en"]
-    tokens = F.split(F.lower(F.trim(col)), r"\s+")
-    hits = F.size(F.filter(tokens, lambda t: t.isin(*words)))
-    total = whitespace_token_count(col)
-    return F.when(total == 0, F.lit(0.0)).otherwise(hits / total)
-
-
 def quality_score(col: Column) -> Column:
     """Composite [0,1] quality heuristic: length band + punctuation
     sanity + mean token length band. Deterministic and SQL-mirrorable."""

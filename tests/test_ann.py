@@ -124,7 +124,7 @@ def test_ann_dedup_exact_matches_numpy_oracle(spark, vectors):
     res = ann_dedup(vectors, DIM, cfg, exact=True)
     got_kept = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
     assert got_kept == want_kept
-    assert res.metrics.match_edges > 0
+    assert res.metrics.facts["cc_edges"] > 0
 
 
 def test_ann_dedup_adaptive_k_full_probe_is_exact(spark, vectors):
@@ -146,8 +146,8 @@ def test_ann_dedup_adaptive_k_full_probe_is_exact(spark, vectors):
 
     res = ann_dedup(vectors, DIM, cfg, exact=False, n_centroids=4, n_probe=4, k0=2)
     got = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
-    assert res.metrics.rounds >= 2, "k0=2 on 20-dup clusters must saturate round 1"
-    assert res.metrics.contractions > 0, (
+    assert res.metrics.facts["rounds"] >= 2, "k0=2 on 20-dup clusters must saturate round 1"
+    assert res.metrics.facts["contractions"] > 0, (
         "dense saturated components must contract to one searcher each"
     )
     assert got == want
@@ -161,7 +161,7 @@ def test_ann_dedup_no_matches_keeps_all(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     res = ann_dedup(df, DIM, ANNConfig(threshold=0.999), exact=True)
     assert res.kept.count() == 40
-    assert res.metrics.match_edges == 0
+    assert res.metrics.facts["cc_edges"] == 0
 
 
 def test_ivf_search_unbounded_queries_no_broadcast(spark, vectors):
@@ -433,15 +433,15 @@ def test_ann_dedup_identical_vector_collapse(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     res = ann_dedup(df, DIM, ANNConfig(threshold=0.95), exact=False, k0=4)
-    assert res.metrics.n_distinct == n_bg + 1, "identical block must collapse to one rep"
+    assert res.metrics.facts["n_distinct"] == n_bg + 1, "identical block must collapse to one rep"
     # O(M) edges: M-1 stars (+ any background pairs, none at thr=0.95)
-    assert res.metrics.match_edges <= m_ident + n_bg, (
-        f"{res.metrics.match_edges} edges — quadratic would be ~{m_ident * (m_ident - 1) // 2}"
+    assert res.metrics.facts["cc_edges"] <= m_ident + n_bg, (
+        f"{res.metrics.facts['cc_edges']} edges — quadratic would be ~{m_ident * (m_ident - 1) // 2}"
     )
     kept = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
     assert kept == {0} | set(range(m_ident, m_ident + n_bg))
     # the saturation loop must not have chased k past the DISTINCT count
-    assert res.metrics.k_final <= 2 * (n_bg + 1) * 2
+    assert res.metrics.facts["k_final"] <= 2 * (n_bg + 1) * 2
 
 
 def test_ann_dedup_near_identical_megacluster_contracts(spark):
@@ -468,15 +468,15 @@ def test_ann_dedup_near_identical_megacluster_contracts(spark):
 
     k0 = 4
     res = ann_dedup(df, DIM, ANNConfig(threshold=0.95), exact=False, k0=k0)
-    assert res.metrics.n_distinct == m + n_bg, "no byte-identical vectors to collapse"
-    assert res.metrics.contractions >= m - 2 * k0, (
-        f"dense cluster must contract, retired only {res.metrics.contractions}"
+    assert res.metrics.facts["n_distinct"] == m + n_bg, "no byte-identical vectors to collapse"
+    assert res.metrics.facts["contractions"] >= m - 2 * k0, (
+        f"dense cluster must contract, retired only {res.metrics.facts['contractions']}"
     )
     # O(M*k): round-1 top-k for every member + the final searcher's
     # exhaustive list (M) + background round-1 rows; quadratic is ~80k
     linear_bound = (m + n_bg) * 2 * k0 + 2 * m
-    assert res.metrics.match_edges <= linear_bound, (
-        f"{res.metrics.match_edges} edges > linear bound {linear_bound} "
+    assert res.metrics.facts["cc_edges"] <= linear_bound, (
+        f"{res.metrics.facts['cc_edges']} edges > linear bound {linear_bound} "
         f"(quadratic would be ~{m * (m - 1) // 2})"
     )
     kept = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
@@ -530,7 +530,7 @@ def test_contraction_single_retired_bridge_still_merges(spark):
         df, DIM, ANNConfig(threshold=thr), exact=False,
         n_centroids=4, n_probe=4, k0=4,  # full probe: IVF recall exact
     )
-    assert res.metrics.contractions > 0, "contraction must actually engage"
+    assert res.metrics.facts["contractions"] > 0, "contraction must actually engage"
     got = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
     assert got == want, "single-retired-hop bridge must still merge the blobs"
 
@@ -567,7 +567,7 @@ def test_contraction_two_retired_chain_documented_divergence(spark):
         df, DIM, ANNConfig(threshold=thr), exact=False,
         n_centroids=4, n_probe=4, k0=4,
     )
-    assert res.metrics.contractions > 0
+    assert res.metrics.facts["contractions"] > 0
     got = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
     # documented divergence: the two contracted components stay separate
     assert got == {0, 200}, (

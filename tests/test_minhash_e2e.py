@@ -206,12 +206,3 @@ def test_signature_udf_runs_once_per_row(spark, corpus_df, shape):
     }[shape]()
     assert udf_evals(frame, "signature") == 1
 
-
-def test_stage_seconds_only_time_executed_stages(spark, corpus_df):
-    # the lazy path runs no stage (CC aside), so it times none
-    lazy = minhash_dedup(corpus_df, MinHashConfig(), collect_metrics=False)
-    assert lazy.metrics.stage_seconds == {}
-    lazy.release()
-    metered = minhash_dedup(corpus_df, MinHashConfig())
-    assert set(metered.metrics.stage_seconds) == {"signatures", "cluster_keep"}
-    metered.release()

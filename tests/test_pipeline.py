@@ -33,6 +33,9 @@ def test_minhash_job_end_to_end(spark, tmp_path, corpus_path):
     blob = json.load(open(metrics_path))
     assert blob["rows_after"] == m.rows_after
     assert blob["stages"]["cc"]["rows"] >= 0
+    assert blob["stages"]["write"]["rows"] == m.rows_after
+    assert blob["facts"]["cc_mode"] == "driver"
+    assert blob["facts"]["cc_edges"] == blob["stages"]["edges"]["rows"]
     assert sum(blob["partition_rows"].values()) == m.rows_after
 
 
@@ -382,10 +385,15 @@ def _ids(df, col):
     return {r[col] for r in df.select(col).collect()}
 
 
+_CC_FACTS = ("cc_mode", "cc_edges")
+_ANN_FACTS = ("rounds", "k_final", "n_distinct", "contractions")
+
+
 def _dedup_and_job(spark, mode, path, tmp_path):
-    """(kept ids of *_dedup(collect_metrics=True), of
-    *_dedup(collect_metrics=False), of the staged *_job; the two
-    dedups' assignment sizes; the job's staged assignment rows)."""
+    """(kept ids of the lazy *_dedup, of the staged *_job; the lazy
+    assignment size; the job's staged assignment rows). Also asserts
+    that both runs report the same CC facts, and for ann the same loop
+    facts, the job's through its metrics JSON."""
     from sparkdedup.ann import ann_dedup
     from sparkdedup.config import ANNConfig, SimHashConfig
     from sparkdedup.io import with_doc_id
@@ -395,14 +403,16 @@ def _dedup_and_job(spark, mode, path, tmp_path):
     from sparkdedup.simhash import simhash_dedup
 
     out, work = str(tmp_path / f"{mode}_out"), str(tmp_path / f"{mode}_work")
+    metrics_path = str(tmp_path / f"{mode}_metrics.json")
     if mode == "ann":
         vectors = spark.read.parquet(path)
         dim = len(vectors.first()["embedding"])
         # n_probe == n_centroids: full probe, so the IVF run is exact
-        dedup = lambda cm: ann_dedup(  # noqa: E731
-            vectors, dim, ANNConfig(threshold=0.9), n_centroids=5, n_probe=5, collect_metrics=cm
+        res = ann_dedup(vectors, dim, ANNConfig(threshold=0.9), n_centroids=5, n_probe=5)
+        m = ann_job(
+            spark, path, out, work, threshold=0.9, n_centroids=5, n_probe=5,
+            metrics_path=metrics_path,
         )
-        m = ann_job(spark, path, out, work, threshold=0.9, n_centroids=5, n_probe=5)
         col = "vec_id"
     else:
         cfg, dedup_fn, job = {
@@ -410,26 +420,25 @@ def _dedup_and_job(spark, mode, path, tmp_path):
             "simhash": (SimHashConfig(), simhash_dedup, simhash_job),
             "jaccard": (MinHashConfig(threshold=0.7), jaccard_dedup, jaccard_job),
         }[mode]
-        df = with_doc_id(spark.read.parquet(path), "doc_id")
-        dedup = lambda cm: dedup_fn(df, cfg, collect_metrics=cm)  # noqa: E731
-        m = job(spark, path, out, work, cfg, id_column="doc_id")
+        res = dedup_fn(with_doc_id(spark.read.parquet(path), "doc_id"), cfg)
+        m = job(spark, path, out, work, cfg, id_column="doc_id", metrics_path=metrics_path)
         col = "doc_id"
-    kept, assigned = [], []
-    for cm in (True, False):
-        res = dedup(cm)
-        kept.append(_ids(res.kept, col))
-        assigned.append(res.assignment.count())
-        res.release()
-    return kept[0], kept[1], _ids(spark.read.parquet(out), col), assigned, m.stages["cc"].rows
+    lazy, assigned = _ids(res.kept, col), res.assignment.count()
+    res.release()
+    assert res.metrics.stages == {} and res.metrics.rows_before == res.metrics.rows_after == -1
+    staged_facts = json.load(open(metrics_path))["facts"]
+    keys = _CC_FACTS + (_ANN_FACTS if mode == "ann" else ())
+    assert {k: res.metrics.facts[k] for k in keys} == {k: staged_facts[k] for k in keys}
+    return lazy, _ids(spark.read.parquet(out), col), assigned, m.stages["cc"].rows
 
 
 @pytest.mark.parametrize("mode", ["minhash", "simhash", "jaccard", "ann"])
 def test_dedup_and_job_keep_the_same_ids(spark, tmp_path, corpus_path, embeddings_path, mode):
     path = embeddings_path if mode == "ann" else corpus_path
-    metered, fast, staged, assigned, _ = _dedup_and_job(spark, mode, path, tmp_path)
-    assert metered == fast == staged
+    lazy, staged, assigned, _ = _dedup_and_job(spark, mode, path, tmp_path)
+    assert lazy == staged
     assert 0 < len(staged) < (200 if mode == "ann" else 400)
-    assert min(assigned) > 0
+    assert assigned > 0
 
 
 @pytest.mark.parametrize("mode", ["minhash", "simhash", "jaccard", "ann"])
@@ -449,9 +458,9 @@ def test_dedup_and_job_without_near_dups_keep_every_eligible_row(
         else:  # minhash/jaccard drop docs below min_length
             eligible = set(docs["doc_id"][docs["content"].str.split().str.len() >= 5])
             assert len(eligible) == len(docs) - 3
-    metered, fast, staged, assigned, staged_assigned = _dedup_and_job(spark, mode, path, tmp_path)
-    assert metered == fast == staged == eligible
-    assert assigned == [0, 0] and staged_assigned == 0
+    lazy, staged, assigned, staged_assigned = _dedup_and_job(spark, mode, path, tmp_path)
+    assert lazy == staged == eligible
+    assert assigned == 0 and staged_assigned == 0
 
 
 # work-dir outputs of each stage name, as the staged jobs lay them out
@@ -511,6 +520,8 @@ def test_resume_after_every_stage(spark, tmp_path, corpus_path, name):
         assert [s for s in mk.stages if s != "write"] == stages
         assert [mk.stages[s].resumed for s in stages] == [i <= k for i in range(len(stages))], stage
         assert [mk.stages[s].rows for s in stages] == [m.stages[s].rows for s in stages]
+        if "cc" in stages:  # CC facts come only from a CC stage that runs
+            assert any(f.startswith("cc_") for f in mk.facts) != mk.stages["cc"].resumed
         assert _rows(spark, out) == want, f"{name}: output differs after resuming from {stage}"
     kept_ids = os.path.join(work, "kept_ids.parquet")
     if os.path.exists(kept_ids):

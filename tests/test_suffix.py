@@ -8,7 +8,14 @@ from pyspark.sql import functions as F
 
 from sparkdedup.config import SubstringConfig
 from sparkdedup.fixtures import LICENSE_HEADER, generate_code_files
-from sparkdedup.suffix import _B1, _B1_INV, rolling_hashes, splice_out, substring_dedup
+from sparkdedup.suffix import (
+    _B1, _B1_INV, _detect_dup_keys, rolling_hashes, splice_out, substring_dedup,
+)
+
+
+def duplicated_windows(df, cfg):
+    """Window occurrences whose fingerprint repeats: pass A's summed ``c``."""
+    return _detect_dup_keys(df, cfg).agg(F.coalesce(F.sum("c"), F.lit(0))).first()[0]
 
 
 def brute_force_substring_dedup(texts, k):
@@ -73,13 +80,14 @@ def test_substring_e2e_matches_bruteforce(spark):
     }
 
     df = spark.createDataFrame(corpus).withColumn("__id__", F.col("doc_id"))
-    res = substring_dedup(df, SubstringConfig(column="content", k=k))
+    cfg = SubstringConfig(column="content", k=k)
+    res = substring_dedup(df, cfg)
     got = {row["doc_id"]: row["content"] for row in res.kept.select("doc_id", "content").collect()}
     assert set(got) == set(expect)
     mism = [i for i in got if got[i] != expect[i]]
     assert not mism, f"content mismatch for ids {mism[:5]}"
     # license headers are planted >= 80 bytes shared: they must be gone
-    assert res.metrics.duplicated_windows > 0
+    assert duplicated_windows(df, cfg) > 0
     for i, t in got.items():
         assert LICENSE_HEADER not in t
 
@@ -90,16 +98,16 @@ def test_substring_shuffle_fallback_matches_broadcast(spark):
     corpus = generate_code_files(150, seed=7)
     df = spark.createDataFrame(corpus).withColumn("__id__", F.col("doc_id"))
     k = 80
-    res_b = substring_dedup(df, SubstringConfig(column="content", k=k))
-    res_s = substring_dedup(
-        df, SubstringConfig(column="content", k=k, max_broadcast_keys=0)
-    )
-    assert res_b.metrics.path == "broadcast"
-    assert res_s.metrics.path == "shuffle"
+    cfg_b = SubstringConfig(column="content", k=k)
+    cfg_s = SubstringConfig(column="content", k=k, max_broadcast_keys=0)
+    res_b = substring_dedup(df, cfg_b)
+    res_s = substring_dedup(df, cfg_s)
+    assert res_b.metrics.facts["splice_path"] == "broadcast"
+    assert res_s.metrics.facts["splice_path"] == "shuffle"
     got_b = {r["doc_id"]: r["content"] for r in res_b.kept.select("doc_id", "content").collect()}
     got_s = {r["doc_id"]: r["content"] for r in res_s.kept.select("doc_id", "content").collect()}
     assert got_b == got_s
-    assert res_b.metrics.duplicated_windows == res_s.metrics.duplicated_windows
+    assert duplicated_windows(df, cfg_b) == duplicated_windows(df, cfg_s)
 
 
 def test_substring_chunked_matches_unchunked(spark):
@@ -215,8 +223,8 @@ def test_substring_shuffle_64mb_fully_duplicated_doc(spark):
     per_doc = {r["__id__"]: r["count"] for r in ranges}
     assert per_doc == {0: 1, 1: 1}, per_doc
 
-    res = substring_dedup(df, cfg, collect_metrics=False)
-    assert res.metrics.path == "shuffle"
+    res = substring_dedup(df, cfg)
+    assert res.metrics.facts["splice_path"] == "shuffle"
     got = {r["doc_id"]: r["content"] for r in res.kept.collect()}
     assert set(got) == {2} and got[2] == "tiny unique survivor doc"
     res.release()
@@ -267,7 +275,7 @@ def test_dup_ranges_exact_under_shuffle_join(spark, monkeypatch):
     df = spark.createDataFrame(corpus).withColumn("__id__", F.col("doc_id"))
     k = 50
     res_b = substring_dedup(df, SubstringConfig(column="content", k=k))
-    assert res_b.metrics.path == "broadcast"
+    assert res_b.metrics.facts["splice_path"] == "broadcast"
     expect_kept = {r["doc_id"]: r["content"] for r in res_b.kept.select("doc_id", "content").collect()}
 
     buffer_rows = 64
@@ -290,7 +298,7 @@ def test_dup_ranges_exact_under_shuffle_join(spark, monkeypatch):
         plan = rows._jdf.queryExecution().executedPlan().toString()
         ranges = suffix._dup_ranges(dup_wins, cfg, "__id__").toPandas()
         res_s = substring_dedup(df, cfg)
-        assert res_s.metrics.path == "shuffle"
+        assert res_s.metrics.facts["splice_path"] == "shuffle"
         got_kept = {r["doc_id"]: r["content"] for r in res_s.kept.select("doc_id", "content").collect()}
     finally:
         spark.conf.set(threshold, old)

@@ -70,13 +70,13 @@ times, survivors = [], None
 # startup instead). Steady-state reps are the deployable number — a
 # real cluster's executors are warm.
 warm0 = time.time()
-res = minhash_dedup(df, MinHashConfig(), collect_metrics=False)
+res = minhash_dedup(df, MinHashConfig())
 survivors = res.kept.count()
 warmup_s = round(time.time() - warm0, 2)
 for _ in range(cfg["reps"]):
     spark.catalog.clearCache()
     t0 = time.time()
-    res = minhash_dedup(df, MinHashConfig(), collect_metrics=False)
+    res = minhash_dedup(df, MinHashConfig())
     s = res.kept.count()
     times.append(round(time.time() - t0, 2))
     assert s == survivors

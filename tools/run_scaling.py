@@ -49,13 +49,13 @@ n = df.count()
 # at 100TB a pipeline processes thousands of shards, so the warm number
 # is the capacity-planning one. Both reported.
 t0 = time.time()
-res = minhash_dedup(df, MinHashConfig(), collect_metrics=False)
+res = minhash_dedup(df, MinHashConfig())
 survivors = res.kept.count()
 cold = time.time() - t0
 res.kept.unpersist() if hasattr(res.kept, "unpersist") else None
 spark.catalog.clearCache()
 t1 = time.time()
-res2 = minhash_dedup(df, MinHashConfig(), collect_metrics=False)
+res2 = minhash_dedup(df, MinHashConfig())
 survivors2 = res2.kept.count()
 warm = time.time() - t1
 assert survivors2 == survivors
