@@ -46,6 +46,12 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.when(union == 0, lit(1.0)).otherwise(inter.cast("double") / union)
 
 
+def shingle_hash(shingle: Column) -> Column:
+    """The 64-bit hash that stands for one shingle string in the
+    verification join (collision bound: jaccard_dedup's docstring)."""
+    return F.xxhash64(shingle)
+
+
 def jaccard_verified_edges(
     kept_docs: DataFrame, cfg: MinHashConfig, id_col: str = DOC_ID
 ) -> DataFrame:
@@ -62,7 +68,7 @@ def jaccard_verified_edges(
     shingles = kept_docs.select(
         col(id_col),
         F.array_distinct(
-            F.transform(shingle_array(col(cfg.column), cfg.ngram), lambda x: F.xxhash64(x))
+            F.transform(shingle_array(col(cfg.column), cfg.ngram), shingle_hash)
         ).alias("__sh__"),
     )
     return (
@@ -84,10 +90,13 @@ def jaccard_dedup(
     below min_length are dropped (same as minhash_dedup). The metrics'
     ``cc_edges`` fact, when CC knows it, counts the VERIFIED edges.
 
-    Verification runs on xxhash64-hashed shingles: the measured Jaccard
-    of a pair differs from the string-set value only if two distinct
-    shingles of the pair share a 64-bit hash, probability ≈ |s|²/2⁶⁴
-    per document for |s| distinct shingles (~5e-12 at 10k shingles).
+    Verification runs on shingles hashed by ``shingle_hash``
+    (xxhash64): each doc's shingle set is replaced by its image under
+    the hash, so a pair's measured Jaccard is |h(A) ∩ h(B)| /
+    |h(A) ∪ h(B)|. It differs from the string-set value only if two
+    distinct shingles of the pair share a 64-bit hash, probability
+    ≈ |s|²/2⁶⁴ per document for |s| distinct shingles (~5e-12 at 10k
+    shingles); such a collision can move the value up or down.
     """
     return _signature_dedup(
         df, cfg, id_col, "jaccard", lambda s: jaccard_verified_edges(s, cfg, id_col)

@@ -15,12 +15,14 @@ Architecture (Spark-first, NOT a port):
     O(chunk × num_perm) whatever the document sizes) — replaces the
     reference's per-row rdd.flatMap.
   * banding: JVM-side ``posexplode`` of the array<binary> signature.
-  * candidate edges: pre-aggregated group-min + join back, NOT
-    groupBy().collect_list: map-side partial aggregation means a
-    mega-cluster band key costs a combine, not a single-task list
-    build; singleton band groups (the overwhelming majority) are pruned
-    by ``count > 1`` BEFORE the join, so AQE can broadcast the
-    collision table when it is small and skew-split the join when not.
+  * candidate edges: each (band, hash) becomes a 128-bit key (k1, k2),
+    grouped in two rounds, NOT groupBy().collect_list. Round 1 counts
+    rows per 64-bit ``k1`` with a map-side combine, which finds the
+    candidate keys; round 2 takes the running min over the id-sorted
+    rows of each (k1, k2) among the rows whose ``k1`` repeats (~11% on
+    the code corpus). With the candidates broadcast, only those rows
+    shuffle the full 16-byte key; a mega-cluster key's rows meet in one
+    round-2 sort task.
   * clustering + keep: the shared cc.cluster_keep tail (checkpointed
     label propagation or the driver NumPy hook-and-compress solver, no
     GraphFrames).
@@ -33,7 +35,7 @@ from typing import Callable, List, Optional
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import ArrayType, BinaryType
@@ -163,14 +165,10 @@ def minhash_bands(df: DataFrame, cfg: MinHashConfig, id_col: str = DOC_ID) -> Da
 
 
 def band_edges(bands: DataFrame, id_col: str = DOC_ID) -> DataFrame:
-    """Star edges (src -> band-group minimum), skew-safe.
-
-    Two-phase plan: (1) groupBy(band, hash) min/count with map-side
-    combine — no per-key row materialization, immune to mega-cluster
-    keys; (2) prune singleton groups, then join the collision minima
-    back. AQE broadcasts the (usually tiny) collision table or splits
-    skewed probe partitions.
-    """
+    """Star edges (src -> band-group minimum) of the (id, band, hash)
+    band table: each (band, hash) becomes a 128-bit key (k1, k2) and
+    ``group_min_edges`` links every row of a colliding key to the
+    key's minimum id."""
     # 128-bit two-long key instead of the raw (band, 40-byte binary)
     # pair: binary grouping keys measured ~4x slower in HashAggregate,
     # and a single 64-bit key would produce ~1e7 false merges at
@@ -181,16 +179,30 @@ def band_edges(bands: DataFrame, id_col: str = DOC_ID) -> DataFrame:
         F.xxhash64("band", "hash").alias("k1"),
         F.xxhash64("hash", F.lit(0x9E3779B9), "band").alias("k2"),
     )
-    mins = (
-        keyed.groupBy("k1", "k2")
-        .agg(F.min(id_col).alias("dst"), F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > 1)
-        .drop("cnt")
-    )
+    return group_min_edges(keyed, id_col)
+
+
+def group_min_edges(keyed: DataFrame, id_col: str = DOC_ID) -> DataFrame:
+    """Distinct (src, dst) edges from every (id_col, k1, k2) row to its
+    (k1, k2) group's minimum id; singleton groups emit nothing.
+
+    Two rounds, so the 16-byte key crosses a shuffle only for the rows
+    that can collide. Round 1 counts rows per ``k1`` with a map-side
+    combine: one 8-byte key per row, and every ``k1`` seen twice is a
+    candidate, a superset of the colliding (k1, k2) keys. Round 2
+    semi-joins the rows to the candidates and takes each (k1, k2)
+    group's minimum with a running min over its id-sorted rows. When
+    the candidates are broadcast only their rows shuffle; a sort-merge
+    semi-join shuffles every row once, by ``k1``, and the window reuses
+    that partitioning. A 64-bit false candidate only carries a few more
+    rows into round 2; the edges depend on (k1, k2) alone.
+    """
+    candidates = keyed.groupBy("k1").count().filter(F.col("count") > 1).select("k1")
+    group = Window.partitionBy("k1", "k2").orderBy(id_col)
     return (
-        keyed.join(mins, on=["k1", "k2"])
-        .filter(F.col(id_col) != F.col("dst"))
-        .select(F.col(id_col).alias("src"), F.col("dst"))
+        keyed.join(candidates, on="k1", how="leftsemi")
+        .select(F.col(id_col).alias("src"), F.min(id_col).over(group).alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
     )
 

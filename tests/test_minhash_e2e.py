@@ -92,11 +92,32 @@ def test_sha256_invariant_and_schema(spark, corpus, corpus_df):
 
 
 def test_band_edges_point_to_group_min(spark, corpus_df):
+    """band_edges equals a pandas oracle: every row of a (band, hash)
+    group shared by two or more docs points to the group's minimum id."""
     cfg = MinHashConfig(ngram=5, min_length=5, num_perm=250, b=25, r=10)
     bands = minhash_bands(corpus_df, cfg)
-    edges = band_edges(bands)
-    rows = edges.collect()
-    assert all(row["dst"] < row["src"] for row in rows)
+    rows = bands.toPandas()
+    rows["dst"] = rows.groupby(["band", "hash"])["__id__"].transform("min")
+    linked = rows[rows["__id__"] != rows["dst"]]
+    want = set(zip(linked["__id__"], linked["dst"]))
+    got = {(r["src"], r["dst"]) for r in band_edges(bands).collect()}
+    assert len(want) > 50
+    assert got == want
+
+
+def test_group_min_edges_is_exact_per_128_bit_key(spark):
+    """Rows sharing k1 but not k2 are candidates of round 1 yet separate
+    groups of round 2: no edge crosses them, each points to its own
+    minimum. Singletons, including a lone row whose k1 matches another
+    key's, emit nothing; a 1,000-row group gives 999 edges."""
+    from sparkdedup.minhash import group_min_edges
+
+    rows = [(5, 1, 10), (3, 1, 10), (9, 1, 10), (4, 1, 20), (8, 1, 20), (2, 1, 30)]
+    rows += [(7, 2, 10), (6, 3, 10)]  # singletons; (7, 2, 10) shares k2 only
+    rows += [(1000 + i, 4, 40) for i in range(1000)]
+    keyed = spark.createDataFrame(rows, "__id__ long, k1 long, k2 long")
+    got = sorted((r["src"], r["dst"]) for r in group_min_edges(keyed).collect())
+    assert got == sorted([(5, 3), (9, 3), (8, 4)] + [(1000 + i, 1000) for i in range(1, 1000)])
 
 
 def test_short_docs_dropped(spark, corpus, corpus_df):
