@@ -17,12 +17,12 @@ Architecture (Spark-first, NOT a port):
   * banding: JVM-side ``posexplode`` of the array<binary> signature.
   * candidate edges: each (band, hash) becomes a 128-bit key (k1, k2),
     grouped in two rounds, NOT groupBy().collect_list. Round 1 counts
-    rows per 64-bit ``k1`` with a map-side combine, which finds the
-    candidate keys; round 2 takes the running min over the id-sorted
-    rows of each (k1, k2) among the rows whose ``k1`` repeats (~11% on
-    the code corpus). With the candidates broadcast, only those rows
-    shuffle the full 16-byte key; a mega-cluster key's rows meet in one
-    round-2 sort task.
+    rows per 32-bit slice of the key (the high half of ``k1``) with a
+    map-side combine, which finds the candidate keys; round 2 takes the
+    running min over the id-sorted rows of each full 128-bit key among
+    the rows whose slice repeats (~11% on the code corpus). With the
+    candidates broadcast, only those rows shuffle the full 16-byte key;
+    a mega-cluster key's rows meet in one round-2 sort task.
   * clustering + keep: the shared cc.cluster_keep tail (checkpointed
     label propagation or the driver NumPy hook-and-compress solver, no
     GraphFrames).
@@ -155,7 +155,11 @@ def make_signature_udf(cfg: MinHashConfig):
 
 
 def minhash_bands(df: DataFrame, cfg: MinHashConfig, id_col: str = DOC_ID) -> DataFrame:
-    """Exploded band table: (id, band, hash: binary)."""
+    """Exploded band table: (id, band, hash: binary).
+
+    ``band_edges`` scans its input once per grouping round, so a caller
+    that does not persist this table runs the signature UDF twice. The
+    staged jobs and the lazy ``*_dedup``s persist the signatures first."""
     sig_udf = make_signature_udf(cfg)
     return (
         df.select(F.col(id_col), sig_udf(F.col(cfg.column)).alias(SIG))
@@ -187,20 +191,31 @@ def group_min_edges(keyed: DataFrame, id_col: str = DOC_ID) -> DataFrame:
     (k1, k2) group's minimum id; singleton groups emit nothing.
 
     Two rounds, so the 16-byte key crosses a shuffle only for the rows
-    that can collide. Round 1 counts rows per ``k1`` with a map-side
-    combine: one 8-byte key per row, and every ``k1`` seen twice is a
-    candidate, a superset of the colliding (k1, k2) keys. Round 2
-    semi-joins the rows to the candidates and takes each (k1, k2)
-    group's minimum with a running min over its id-sorted rows. When
-    the candidates are broadcast only their rows shuffle; a sort-merge
-    semi-join shuffles every row once, by ``k1``, and the window reuses
-    that partitioning. A 64-bit false candidate only carries a few more
-    rows into round 2; the edges depend on (k1, k2) alone.
+    that can collide. The key travels as (hi, lo, k2), ``hi`` and ``lo``
+    the high and low 32 bits of ``k1``. Round 1 counts rows per ``hi``
+    with a map-side combine: one 4-byte key per row, and every ``hi``
+    seen twice is a candidate, a superset of the colliding keys. Round 2
+    semi-joins the rows to the candidates on ``hi`` and takes each
+    (hi, lo, k2) group's minimum with a running min over its id-sorted
+    rows. When the candidates are broadcast only their rows shuffle; a
+    sort-merge semi-join shuffles every row once, by ``hi``, and the
+    window reuses that partitioning. Of n band rows about n/2^32 are
+    false candidates (2.8% at 1.2e8 rows): they only carry a few more
+    rows into round 2, and round 1 saves more than they cost up to about
+    1e9 rows. The edges depend on the full 128-bit key alone.
     """
-    candidates = keyed.groupBy("k1").count().filter(F.col("count") > 1).select("k1")
-    group = Window.partitionBy("k1", "k2").orderBy(id_col)
+    # arithmetic shifts keep both halves in int range, so the casts are
+    # exact (a plain cast of the long raises under ANSI mode)
+    split = keyed.select(
+        F.col(id_col),
+        F.shiftright("k1", 32).cast("int").alias("hi"),
+        F.shiftright(F.shiftleft("k1", 32), 32).cast("int").alias("lo"),
+        F.col("k2"),
+    )
+    candidates = split.groupBy("hi").count().filter(F.col("count") > 1).select("hi")
+    group = Window.partitionBy("hi", "lo", "k2").orderBy(id_col)
     return (
-        keyed.join(candidates, on="k1", how="leftsemi")
+        split.join(candidates, on="hi", how="leftsemi")
         .select(F.col(id_col).alias("src"), F.min(id_col).over(group).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])

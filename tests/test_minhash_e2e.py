@@ -105,19 +105,68 @@ def test_band_edges_point_to_group_min(spark, corpus_df):
     assert got == want
 
 
+def _k1(hi: int, lo: int) -> int:
+    """The signed 64-bit k1 whose high and low 32 bits are hi and lo."""
+    return (hi << 32) | (lo & 0xFFFFFFFF)
+
+
+# (__id__, k1, k2) rows and the edges group_min_edges must give them
+_KEYED_ROWS = [(5, 1, 10), (3, 1, 10), (9, 1, 10), (4, 1, 20), (8, 1, 20), (2, 1, 30)]
+_KEYED_ROWS += [(7, 2, 10), (6, 3, 10)]  # singletons; (7, 2, 10) shares k2 only
+_KEYED_ROWS += [(1000 + i, 4, 40) for i in range(1000)]
+# the same k2 under keys that share k1's high 32 bits but not its low
+# ones, or its low 32 bits but not its high ones (negative halves too)
+_KEYED_ROWS += [(21, _k1(7, 1), 50), (22, _k1(7, 1), 50), (23, _k1(7, 2), 50), (24, _k1(7, 2), 50)]
+_KEYED_ROWS += [(31, _k1(8, -5), 50), (32, _k1(8, -5), 50), (33, _k1(-9, -5), 50)]
+_KEYED_ROWS += [(34, _k1(-9, -5), 50), (35, _k1(-9, 1 << 31), 50)]  # 35: lone, shares hi
+_KEYED_EDGES = sorted(
+    [(5, 3), (9, 3), (8, 4), (22, 21), (24, 23), (32, 31), (34, 33)]
+    + [(1000 + i, 1000) for i in range(1, 1000)]
+)
+
+
+def _keyed(spark):
+    return spark.createDataFrame(_KEYED_ROWS, "__id__ long, k1 long, k2 long")
+
+
 def test_group_min_edges_is_exact_per_128_bit_key(spark):
-    """Rows sharing k1 but not k2 are candidates of round 1 yet separate
-    groups of round 2: no edge crosses them, each points to its own
-    minimum. Singletons, including a lone row whose k1 matches another
-    key's, emit nothing; a 1,000-row group gives 999 edges."""
+    """Rows sharing k1 but not k2, or k1's high 32 bits but not its low
+    ones, or its low 32 bits but not its high ones, are candidates of
+    round 1 yet separate groups of round 2: no edge crosses them, each
+    points to its own minimum. Singletons, including a lone row whose
+    k1 matches another key's, emit nothing; a 1,000-row group gives 999
+    edges."""
     from sparkdedup.minhash import group_min_edges
 
-    rows = [(5, 1, 10), (3, 1, 10), (9, 1, 10), (4, 1, 20), (8, 1, 20), (2, 1, 30)]
-    rows += [(7, 2, 10), (6, 3, 10)]  # singletons; (7, 2, 10) shares k2 only
-    rows += [(1000 + i, 4, 40) for i in range(1000)]
-    keyed = spark.createDataFrame(rows, "__id__ long, k1 long, k2 long")
-    got = sorted((r["src"], r["dst"]) for r in group_min_edges(keyed).collect())
-    assert got == sorted([(5, 3), (9, 3), (8, 4)] + [(1000 + i, 1000) for i in range(1, 1000)])
+    got = sorted((r["src"], r["dst"]) for r in group_min_edges(_keyed(spark)).collect())
+    assert got == _KEYED_EDGES
+
+
+def test_group_min_edges_sort_merge_plan_has_three_exchanges(spark):
+    """Without broadcasts the plan shuffles three times: round 1's count
+    by hi, the semi-join by hi, whose partitioning the (hi, lo, k2)
+    window reuses, and the edge dedup. A key column the join and window
+    do not share would add a fourth. The edges equal the broadcast
+    plan's."""
+    from sparkdedup.minhash import group_min_edges
+
+    def run():
+        edges = group_min_edges(_keyed(spark))
+        got = sorted((r["src"], r["dst"]) for r in edges.collect())
+        # the adaptive plan as run: its text before the initial plan
+        plan = edges._jdf.queryExecution().executedPlan().toString()
+        return got, plan.split("== Initial Plan ==")[0]
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        sort_merge, plan = run()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    broadcast, broadcast_plan = run()
+    assert "BroadcastExchange" not in plan and "BroadcastExchange" in broadcast_plan
+    assert plan.count("Exchange hashpartitioning") == 3, plan
+    assert sort_merge == broadcast == _KEYED_EDGES
 
 
 def test_short_docs_dropped(spark, corpus, corpus_df):

@@ -321,12 +321,13 @@ def test_ids_stage_splits_a_one_file_corpus_without_a_shuffle(spark, tmp_path, c
     assert resumed.stages["ids"].rows == m.stages["ids"].rows == 400
 
 
-def test_minhash_edges_stage_shuffles_under_12_bytes_per_band_row(spark, tmp_path):
+def test_minhash_edges_stage_shuffles_under_7_bytes_per_band_row(spark, tmp_path):
     """Shuffle budget of minhash_job's edges stage on the seeded 3,000-doc
-    code corpus (74,250 band rows). Round 1 shuffles one 8-byte k1 per
-    band row; only the ~11% of rows whose k1 repeats carry the full
-    128-bit key into round 2. Grouping every row on (k1, k2) shuffled
-    16.4 bytes per band row."""
+    code corpus (74,250 band rows). Round 1 shuffles one 32-bit slice of
+    the band key per band row; only the ~11% of rows whose slice repeats
+    carry the full 128-bit key into round 2. Grouping every row on the
+    128-bit key shuffled 16.4 bytes per band row, and a round 1 on a
+    64-bit slice 9.8."""
     from perfbench.probe import StatusStore
     from sparkdedup.minhash import minhash_edges
     from sparkdedup.pipeline import RunMetrics, _signature_edges, _stage_ids
@@ -343,7 +344,7 @@ def test_minhash_edges_stage_shuffles_under_12_bytes_per_band_row(spark, tmp_pat
     shuffled = store.totals("edges_budget").shuffle_mb * 1e6
     band_rows = docs.count() * cfg.resolved_bands()[0]
     assert band_rows == 74_250
-    assert shuffled / band_rows < 12, f"{shuffled / band_rows:.2f} B per band row"
+    assert shuffled / band_rows < 7, f"{shuffled / band_rows:.2f} B per band row"
 
 
 def test_entry_release_all_unpersists(spark):
