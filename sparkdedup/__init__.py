@@ -11,8 +11,8 @@ Design rules (SURVEY.md §7):
   * Python only inside Arrow-batched pandas UDFs (never per-row).
   * Explicit skew handling for LSH band keys (pre-aggregated group-min +
     AQE skew join; no collect_list mega-groups).
-  * Our own checkpointed label-propagation connected components (no
-    GraphFrames).
+  * Our own hook-and-compress connected components, on the driver or
+    in checkpointed DataFrame rounds (no GraphFrames).
 """
 
 __version__ = "0.1.0"

@@ -687,8 +687,9 @@ def ann_match_edges(
     graph the CC/cluster stage consumes (and the staged ann_job
     checkpoints). exact=True: all-pairs threshold join; else the
     adaptive-k loop over the IVF index (see ann_dedup). The loop's
-    ``rounds``, ``k_final``, ``n_distinct`` and ``contractions`` (saturated
-    searchers retired by component contraction) go to ``facts``.
+    ``rounds``, ``k_final``, ``n_distinct``, ``accepted`` (match rows
+    per round) and ``contractions`` (saturated searchers retired by
+    component contraction) go to ``facts``.
 
     Identical vectors are collapsed to a min-id representative BEFORE
     the adaptive-k loop (same move as the SRP path,
@@ -739,7 +740,7 @@ def ann_match_edges(
     # materialization (the loop re-checkpoints `remaining` per round)
     remaining = tagged.filter(F.col("query_id") == F.col("rep")).select("query_id", "qv")
     n_total = remaining.count()
-    facts.update(n_distinct=n_total, rounds=0, contractions=0)
+    facts.update(n_distinct=n_total, rounds=0, contractions=0, accepted=[])
     index = build_ivf_index(
         remaining.select(
             F.col("query_id").alias(cfg.id_column), F.col("qv").alias(cfg.vector_column)
@@ -767,18 +768,17 @@ def ann_match_edges(
         # re-query at 2k only hunts matches BEYOND top-k). Saturation
         # counts come from a plain groupBy over the same checkpoint: no
         # collect_list — a dense query would otherwise materialize an
-        # M-struct list in one group.
+        # M-struct list in one group. One aggregate over it gives both
+        # the round's accepted rows and its saturated searchers.
         accepted.append(res)
+        per_query = res.groupBy("query_id").agg(F.count(F.lit(1)).alias("__n__"))
+        is_sat = (F.col("__n__") >= k).cast("long")
+        n_rows, n_sat = per_query.agg(F.sum("__n__"), F.sum(is_sat)).first()
+        facts["accepted"].append(n_rows or 0)
         if k > 2 * n_total:  # k was beyond any possible result size
             break
-        saturated = (
-            res.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("__n__"))
-            .filter(F.col("__n__") >= k)
-            .select("query_id")
-        )
-        n_sat = saturated.count()
-        if n_sat == 0:
+        saturated = per_query.filter(F.col("__n__") >= k).select("query_id")
+        if not n_sat:
             break
         if n_sat >= _CONTRACT_MIN_COMPONENT:
             # component CONTRACTION — the near-identical analogue of
@@ -806,7 +806,7 @@ def ann_match_edges(
             for extra in accepted[1:]:
                 edges_so_far = edges_so_far.unionByName(extra)
             comp, _ = connected_components(
-                edges_so_far, src="query_id", dst="neighbor_id"
+                edges_so_far, src="query_id", dst="neighbor_id", n_edges=sum(facts["accepted"])
             )
             cw = Window.partitionBy("__c__")
             saturated = (

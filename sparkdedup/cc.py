@@ -1,25 +1,22 @@
-"""Connected components: a NumPy solver on the driver, checkpointed
-DataFrame label propagation above ``driver_threshold`` edges.
+"""Connected components: one hook-and-compress algorithm, run by a
+NumPy solver on the driver or as DataFrame rounds above
+``driver_threshold`` edges.
 
 Replaces the reference's GraphFrames call (minhash_spark.py:501-503)
-and UnionFind (utils/union_find.py:9-98). The driver solver
-(``_hook_compress``) hooks every root under its smallest neighbouring
-root over whole edge arrays, then pointer-jumps to a fixpoint. A root
-outlives a round only as a local minimum of the contracted graph, so
-the root count at least halves every two rounds: ≤ ~2·log2(V) rounds.
-
-The distributed path is min-label propagation over hash joins with
-pointer jumping (label <- label-of-label), after Kiveris et al.,
-"Connected Components in MapReduce and Beyond": one or two rounds on
-LSH star graphs, but its rounds grow with the length of a path in
-random id order. Every round is ``localCheckpoint``-ed (eager) to cut
-lineage, so a failed round restarts from materialized blocks. Labels
-only decrease, so equal ``sum(label)`` between rounds is an exact
-fixpoint test; a run that reaches ``max_iterations`` rounds without it
-raises rather than return unconverged labels.
-
-Both paths match GraphFrames' contract: one row per vertex that appears
-in the edge list, ``component`` = minimum vertex id of its component.
+and UnionFind (utils/union_find.py:9-98). Each round drops the edges
+inside one tree, hooks every root under its smallest neighbouring root
+and pointer-jumps the hooks to a fixpoint. A root outlives a round
+only as a local minimum of the contracted graph, so the root count at
+least halves every two rounds: ≤ ~2·log2(V) rounds, whatever the
+shape of the graph. The driver solver (``_hook_compress``) runs them
+over NumPy edge arrays; the distributed path runs them as joins and
+hands off to the driver solver once the live edges fit under
+``driver_threshold``. Each frame a round keeps goes through ``_cut``,
+which drops its lineage and its size estimate: left in place, the
+estimate grows geometrically and stalls the optimizer within a few
+rounds. Both paths match GraphFrames' contract: one row per vertex
+that appears in the edge list, ``component`` = minimum vertex id of
+its component.
 
 The module also holds the lazy ``*_dedup`` tail (``cluster_keep``) and
 ``RunMetrics``, the one metrics record lazy and staged runs both return.
@@ -32,7 +29,6 @@ from typing import Any, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,18 +37,19 @@ COMPONENT = "__component__"
 
 @dataclass
 class CCStats:
-    iterations: int = 0
-    label_sums: List[int] = field(default_factory=list)
+    iterations: int = 0  # distributed path: hook rounds, hand-off included
     mode: str = "distributed"
     # exact edge count when the driver path collected the full list;
     # None on the distributed path (never counted there). Lets callers
     # detect the empty-graph case without paying an extra isEmpty job.
     n_edges: "int | None" = None
+    # distributed path: live edges counted before each round; the last
+    # count ended the loop (0, or the edges handed to the driver)
+    live_edges: List[int] = field(default_factory=list)
 
 
 def connected_components(
     edges: DataFrame,
-    max_iterations: int = 50,
     src: str = "src",
     dst: str = "dst",
     driver_threshold: int = 4_000_000,
@@ -60,18 +57,15 @@ def connected_components(
 ) -> Tuple[DataFrame, CCStats]:
     """Compute connected components of an undirected edge list.
 
-    Hybrid strategy: LSH candidate graphs are usually a small fraction
-    of the corpus (edges ≈ duplicates, not documents), so below
-    ``driver_threshold`` edges are collected once and solved on the
-    driver by the NumPy hook-and-compress solver (``_hook_compress``,
-    ≤ ~2·log2(V) array rounds) — where the reference's non-Spark paths
-    run their UnionFind (minhash.py:401-412) — and the result is
-    shipped back Arrow-batched. Above the threshold, the
-    checkpointed distributed label propagation runs. Both produce the
-    identical min-id labeling; the distributed path raises
-    ``RuntimeError`` if it finds no fixpoint within ``max_iterations``
-    rounds (its rounds grow with the length of a path in random id
-    order).
+    LSH candidate graphs are usually a small fraction of the corpus
+    (edges ≈ duplicates, not documents), so below ``driver_threshold``
+    edges are collected once and solved on the driver by
+    ``_hook_compress`` — where the reference's non-Spark paths run
+    their UnionFind (minhash.py:401-412) — and the result is shipped
+    back Arrow-batched. Above the threshold the same ≤ ~2·log2(V)
+    rounds run on DataFrames over the live edges (``u < v``, no
+    duplicates), counted before each round into ``CCStats.live_edges``;
+    once they fit under the threshold the driver solver finishes.
 
     A caller that already knows the edge count passes it as
     ``n_edges`` and skips the sizing probe: at or below the threshold
@@ -124,75 +118,77 @@ def connected_components(
             out = pa.table({"id": ids, "component": labels})
             return edges.sparkSession.createDataFrame(out), stats
 
-    # distributed path: the symmetrized union reads the edge lineage
-    # again — persist unless the caller already did
-    lvl = edges.storageLevel
-    we_persisted = False
-    if not (lvl.useMemory or lvl.useDisk):
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        we_persisted = True
-
-    try:
-        sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        sym = sym.localCheckpoint(eager=True)
-    finally:
-        if we_persisted:
-            # sym is localCheckpointed, so the input cache is no longer
-            # needed
-            edges.unpersist()
-
-    # label(x) = min(x, min neighbor) — LSH star edges already point at
-    # group minima, so this seed is typically 1 hop from the fixpoint.
-    assign = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("nbr_min"))
-        .select(F.col("a").alias("id"), F.least("a", "nbr_min").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-    # seed sum: lets a seed that is already the fixpoint (pure star
-    # graphs — the common LSH case) converge after ONE confirm round.
-    # Decimal: a long sum of xxhash64 ids overflows (ANSI mode raises).
-    label_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
-    stats.label_sums.append(int(assign.agg(label_sum).collect()[0][0] or 0))
-
-    for _ in range(max_iterations):
-        stats.iterations += 1
-        # candidate labels: own, neighbors' labels, and label-of-label
-        # (pointer jumping). groupBy-min has map-side partial
-        # aggregation, so mega-components never serialize into one task.
-        nbr = (
-            sym.join(assign.withColumnRenamed("id", "b"), on="b")
-            .select(F.col("a").alias("id"), "comp")
-        )
-        jump = (
-            assign.alias("x")
-            .join(
-                assign.select(F.col("id").alias("comp"), F.col("comp").alias("jcomp")).alias("y"),
-                on="comp",
-            )
-            .select(F.col("id"), F.col("jcomp").alias("comp"))
-        )
-        new_assign = (
-            assign.unionByName(nbr).unionByName(jump)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        total = int(new_assign.agg(label_sum).collect()[0][0] or 0)
-        prev = stats.label_sums[-1] if stats.label_sums else None
-        stats.label_sums.append(total)
-        assign = new_assign
-        if prev is not None and prev == total:
+    # distributed path: one read of the input; self-loops stay in
+    # `ends` so that their vertices keep a row
+    ends = _cut(edges.select(F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")).distinct())
+    live = ends.filter(F.col("u") != F.col("v"))
+    roots = None  # (id, root) of every vertex hooked so far
+    while True:
+        stats.live_edges.append(live.count())
+        if stats.live_edges[-1] <= driver_threshold:
             break
-    else:
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {max_iterations} label-propagation "
-            f"rounds (label sums {stats.label_sums[-3:]}); raise max_iterations"
+        stats.iterations += 1
+        hooks = _jump(_cut(live.groupBy(F.col("v").alias("id")).agg(F.min("u").alias("root"))))
+        u, v = F.coalesce("ru", "u"), F.coalesce("rv", "v")
+        live = _cut(
+            live.join(hooks.toDF("u", "ru"), "u", "left")
+            .join(hooks.toDF("v", "rv"), "v", "left")
+            .select(F.least(u, v).alias("u"), F.greatest(u, v).alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
         )
+        roots = _compose(roots, hooks)
+    if stats.live_edges[-1]:
+        # hand-off: the count above is the collect's size, no probe
+        t = live.toArrow()
+        ids, labels, rounds = _hook_compress(t["u"].to_numpy(), t["v"].to_numpy())
+        stats.iterations += rounds
+        hooked = ids != labels
+        hooks = edges.sparkSession.createDataFrame(pa.table({"id": ids[hooked], "root": labels[hooked]}))
+        roots = _compose(roots, hooks)
 
-    return assign.select("id", F.col("comp").alias("component")), stats
+    verts = ends.select(F.col("u").alias("id")).union(ends.select(F.col("v").alias("id"))).distinct()
+    if roots is None:
+        return verts.select("id", F.col("id").alias("component")), stats
+    return verts.join(roots, "id", "left").select("id", F.coalesce("root", "id").alias("component")), stats
+
+
+def _cut(df: DataFrame) -> DataFrame:
+    """``df`` materialized as a plan leaf with neither lineage nor an
+    inherited size estimate.
+
+    ``localCheckpoint`` cuts the lineage, but its ``LogicalRDD`` keeps
+    the estimate of the plan it came from (``LogicalRDD.fromDataset``),
+    and ``SizeInBytesOnlyStatsPlanVisitor`` multiplies the sizes of a
+    join's children: the ``sizeInBytes`` BigInt grows geometrically
+    round by round, until rules such as ``InjectRuntimeFilter`` stall
+    in BigInteger multiplication. The JVM-side
+    ``internalCreateDataFrame`` over the checkpoint's rows rebuilds the
+    leaf without origin statistics (``spark.sql.defaultSizeInBytes``)."""
+    ck, spark = df.localCheckpoint(eager=True)._jdf, df.sparkSession
+    jdf = spark._jsparkSession.internalCreateDataFrame(ck.queryExecution().toRdd(), ck.schema(), False)
+    return DataFrame(jdf, spark)
+
+
+def _jump(hooks: DataFrame) -> DataFrame:
+    """Pointer-jump (id, root) hooks until no root is itself hooked;
+    the last jump only confirms the fixpoint."""
+    while True:
+        up = hooks.join(hooks.toDF("root", "up"), "root", "left")
+        root = F.coalesce("up", "root").alias("root")
+        jumped = _cut(up.select("id", root, F.col("up").isNotNull().alias("moved")))
+        hooks = jumped.drop("moved")
+        if jumped.filter("moved").isEmpty():
+            return hooks
+
+
+def _compose(roots: Optional[DataFrame], hooks: DataFrame) -> DataFrame:
+    """The vertex -> root map after this round's ``hooks`` (roots of
+    the last round -> roots of this one)."""
+    if roots is None:
+        return hooks
+    moved = roots.join(hooks.toDF("root", "up"), "root", "left")
+    return _cut(moved.select("id", F.coalesce("up", "root").alias("root")).unionByName(hooks))
 
 
 def _hook_compress(a: np.ndarray, b: np.ndarray):
@@ -264,7 +260,8 @@ class RunMetrics:
     a lazy ``*_dedup`` materializes no stage and counts nothing, so its
     ``stages`` stay empty and its row counts stay -1 ("not counted").
     ``facts`` holds what a run learns without an extra job: CC's mode,
-    iterations and edge count when known (``cc_*``), the ANN loop's
+    iterations, edge count when known and the distributed path's
+    per-round live edges (``cc_*``), the ANN loop's
     ``rounds``/``k_final``/``n_distinct``/``contractions`` and the
     substring ``splice_path``."""
 
@@ -277,6 +274,8 @@ class RunMetrics:
 
     def record_cc(self, stats: CCStats) -> None:
         self.facts.update(cc_mode=stats.mode, cc_iterations=stats.iterations)
+        if stats.live_edges:
+            self.facts["cc_live_edges"] = stats.live_edges
         if stats.n_edges is not None:
             self.facts["cc_edges"] = stats.n_edges
 

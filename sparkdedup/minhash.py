@@ -23,8 +23,8 @@ Architecture (Spark-first, NOT a port):
     the rows whose slice repeats (~11% on the code corpus). With the
     candidates broadcast, only those rows shuffle the full 16-byte key;
     a mega-cluster key's rows meet in one round-2 sort task.
-  * clustering + keep: the shared cc.cluster_keep tail (checkpointed
-    label propagation or the driver NumPy hook-and-compress solver, no
+  * clustering + keep: the shared cc.cluster_keep tail (hook-and-compress
+    CC on the driver or in checkpointed DataFrame rounds, no
     GraphFrames).
 """
 

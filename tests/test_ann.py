@@ -444,15 +444,27 @@ def test_ann_dedup_identical_vector_collapse(spark):
     assert res.metrics.facts["k_final"] <= 2 * (n_bg + 1) * 2
 
 
-def test_ann_dedup_near_identical_megacluster_contracts(spark):
+def test_ann_dedup_near_identical_megacluster_contracts(spark, monkeypatch):
     """Round-5 regression (found by the 1M text->ANN e2e): a mega-
     cluster of NEAR-identical vectors — mutually >= threshold but
     distinct bytes, so the identical-vector collapse can't touch it —
     must NOT saturate every member until k >= M (O(M^2) accepted rows).
     Component contraction retires all but one searcher per dense
     component after round 1, and the exhaustive tail round finishes it:
-    edge volume stays O(M*k), survivors exact."""
+    edge volume stays O(M*k), survivors exact. The contraction's CC
+    call gets the accepted row count as ``n_edges``, so it never
+    probes."""
+    from sparkdedup import ann
     from sparkdedup.ann import ann_dedup
+
+    contraction_calls = []
+    cc = ann.connected_components
+
+    def counted_cc(edges, **kw):
+        contraction_calls.append((edges.count(), kw.get("n_edges")))
+        return cc(edges, **kw)
+
+    monkeypatch.setattr(ann, "connected_components", counted_cc)
 
     m, n_bg = 400, 80
     rng = np.random.RandomState(23)
@@ -481,6 +493,12 @@ def test_ann_dedup_near_identical_megacluster_contracts(spark):
     )
     kept = {r["vec_id"] for r in res.kept.select("vec_id").collect()}
     assert kept == {0} | set(range(m, m + n_bg))
+    assert contraction_calls, "the contraction must run CC"
+    for n_rows, n_edges in contraction_calls:
+        assert n_edges == n_rows
+    accepted = res.metrics.facts["accepted"]
+    assert len(accepted) == res.metrics.facts["rounds"]
+    assert contraction_calls[0][1] == accepted[0]
 
 
 def _plane_vec(e1, e2, deg):

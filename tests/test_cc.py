@@ -1,7 +1,9 @@
-"""Connected components vs networkx ground truth and planted minima —
-both the driver NumPy hook-and-compress solver (and its round bound)
-and the distributed label-propagation path — and the known-edge-count
-hint that skips the sizing probe."""
+"""Connected components vs networkx ground truth and planted minima on
+all three paths: the driver NumPy hook-and-compress solver, the same
+rounds on DataFrames (``driver_threshold=0``), and those rounds handing
+their live edges off to the driver solver. Also the round bound of
+both executors, the distributed path's bounded plan estimate, and the
+known-edge-count hint that skips the sizing probe."""
 
 import networkx as nx
 import numpy as np
@@ -13,9 +15,16 @@ from perfbench.probe import StatusStore
 from sparkdedup.cc import _hook_compress, connected_components
 
 
-def _check(spark, edge_list, driver_threshold):
+# driver: collect and solve at once; distributed: DataFrame rounds to
+# the end; handoff: DataFrame rounds, then the driver solver once the
+# live edges fit under a third of the input's
+PATHS = ["distributed", "handoff", "driver"]
+
+
+def _check(spark, edge_list, path):
     edges = spark.createDataFrame(edge_list, schema="src long, dst long")
-    assign, stats = connected_components(edges, driver_threshold=driver_threshold)
+    thr = {"distributed": 0, "handoff": max(1, len(edge_list) // 3), "driver": 2_000_000}[path]
+    assign, stats = connected_components(edges, driver_threshold=thr)
     got = {row["id"]: row["component"] for row in assign.collect()}
 
     g = nx.Graph()
@@ -26,61 +35,60 @@ def _check(spark, edge_list, driver_threshold):
         for node in comp:
             want[node] = m
     assert got == want
-    assert stats.mode == ("driver" if driver_threshold else "distributed")
+    assert stats.mode == ("driver" if path == "driver" else "distributed")
+    if path != "driver":
+        # the same rounds as the driver solver's, hand-off or not
+        _, _, rounds = _hook_compress(*np.array(edge_list, dtype=np.int64).T)
+        assert stats.iterations == rounds
+        assert stats.live_edges[-1] <= thr
     return stats
 
 
-@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
-def test_cc_simple_star(spark, thr):
-    _check(spark, [(2, 1), (3, 1), (5, 4)], thr)
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_simple_star(spark, path):
+    _check(spark, [(2, 1), (3, 1), (5, 4)], path)
 
 
-@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
-def test_cc_chain(spark, thr):
-    # worst case for naive propagation: a long path
-    _check(spark, [(i + 1, i) for i in range(40)], thr)
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_chain(spark, path):
+    # a path in sorted id order: one hook round, log2(V) pointer jumps
+    _check(spark, [(i + 1, i) for i in range(40)], path)
 
 
-@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
-def test_cc_random_graph(spark, thr):
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_random_order_path(spark, path):
+    order = np.random.default_rng(3).permutation(200)
+    _check(spark, [(int(a), int(b)) for a, b in zip(order[1:], order[:-1])], path)
+
+
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_random_graph(spark, path):
     rng = np.random.RandomState(7)
     n = 300
     edge_list = [(int(a), int(b)) for a, b in rng.randint(0, n, size=(400, 2)) if a != b]
-    stats = _check(spark, edge_list, thr)
-    if thr == 0:
-        # a random graph has short paths; a long path in random id order
-        # needs far more rounds (test_cc_distributed_raises_without_fixpoint)
-        assert stats.iterations <= 12
+    stats = _check(spark, edge_list, path)
+    if path == "distributed":
+        assert stats.iterations <= 2 * np.log2(n) + 2
 
 
-def test_cc_distributed_raises_without_fixpoint(spark):
-    # a 40-vertex path in random id order takes far more than two rounds
-    order = np.random.default_rng(3).permutation(40)
-    edges = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in zip(order[1:], order[:-1])], schema="src long, dst long"
-    )
-    with pytest.raises(RuntimeError, match="no fixpoint after 2"):
-        connected_components(edges, driver_threshold=0, max_iterations=2)
-
-
-@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
-def test_cc_merging_clusters(spark, thr):
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_merging_clusters(spark, path):
     # two stars bridged by one edge
-    _check(spark, [(2, 1), (3, 1), (12, 11), (13, 11), (11, 3)], thr)
+    _check(spark, [(2, 1), (3, 1), (12, 11), (13, 11), (11, 3)], path)
 
 
-@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
-def test_cc_signed_64bit_ids(spark, thr):
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_signed_64bit_ids(spark, path):
     # xxhash64-derived __id__ values are negative half the time, and ids
     # above 2**53 lose precision in any float round trip
     big, neg = 2**53 + 1, -(2**63)
-    _check(spark, [(big + 2, big), (big + 1, big + 2), (-5, neg), (2**63 - 1, -5), (7, -1), (8, 7)], thr)
+    _check(spark, [(big + 2, big), (big + 1, big + 2), (-5, neg), (2**63 - 1, -5), (7, -1), (8, 7)], path)
 
 
-@pytest.mark.parametrize("thr", [0, 2_000_000], ids=["distributed", "driver"])
-def test_cc_duplicate_reversed_and_self_loop_edges(spark, thr):
+@pytest.mark.parametrize("path", PATHS)
+def test_cc_duplicate_reversed_and_self_loop_edges(spark, path):
     # (9, 9) alone: a component of one vertex, labelled with itself
-    _check(spark, [(2, 1), (2, 1), (1, 2), (3, 3), (3, 2), (9, 9), (6, 5), (5, 6), (5, 5)], thr)
+    _check(spark, [(2, 1), (2, 1), (1, 2), (3, 3), (3, 2), (9, 9), (6, 5), (5, 6), (5, 5)], path)
 
 
 def test_cc_empty_edges_driver_path(spark):
@@ -139,14 +147,46 @@ def test_hook_compress_round_bound_adversarial():
             assert rounds <= 2 * np.log2(n) + 2
 
 
-def test_cc_planted_graph_labels_are_minima_driver(spark):
-    # driver path only: the distributed path's rounds grow with the
-    # length of a path in random id order (ROADMAP #3)
+@pytest.mark.parametrize("thr", [4_000_000, 0, 10_000], ids=["driver", "distributed", "handoff"])
+def test_cc_planted_graph_labels_are_minima(spark, thr):
     src, dst, truth = _planted(3, 30_000, 30_000)
     edges = spark.createDataFrame(pd.DataFrame({"src": src, "dst": dst}))
-    assign, stats = connected_components(edges)
-    assert stats.mode == "driver" and stats.n_edges == len(src)
+    assign, stats = connected_components(edges, driver_threshold=thr)
+    if thr == 4_000_000:
+        assert stats.mode == "driver" and stats.n_edges == len(src)
+    else:
+        assert stats.mode == "distributed" and stats.iterations == _hook_compress(src, dst)[2]
+        assert (stats.live_edges[-1] > 0) == (thr > 0)
     assert _labels(assign) == truth
+
+
+@pytest.fixture(scope="module")
+def random_path_cc(spark):
+    """A 1,000-vertex path in random id order through the DataFrame
+    rounds to the end: (vertex count, assignment, stats)."""
+    n = 1_000
+    order = np.random.default_rng(17).permutation(n)
+    edges = spark.createDataFrame(pd.DataFrame({"src": order[1:], "dst": order[:-1]}))
+    assign, stats = connected_components(edges, driver_threshold=0)
+    return n, assign, stats
+
+
+def test_cc_random_order_path_rounds_are_logarithmic(random_path_cc):
+    n, assign, stats = random_path_cc
+    assert stats.mode == "distributed"
+    assert set(_labels(assign).values()) == {0} and assign.count() == n
+    # the root count at least halves every two hook rounds
+    assert stats.iterations <= 2 * np.log2(n) + 2
+    assert stats.live_edges[0] == n - 1 and stats.live_edges[-1] == 0
+
+
+def test_cc_distributed_plan_estimate_stays_bounded(random_path_cc):
+    # every round's frames drop the estimate they inherit; kept, its
+    # sizeInBytes grows geometrically (tens of thousands of digits after
+    # four rounds of a 100-vertex path) and planning stalls on it
+    _, assign, _ = random_path_cc
+    size = assign._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert len(str(size)) <= 40
 
 
 def test_cc_paths_agree(spark):
@@ -155,8 +195,12 @@ def test_cc_paths_agree(spark):
     edges = spark.createDataFrame(edge_list, schema="src long, dst long")
     a1, s1 = connected_components(edges, driver_threshold=0)
     a2, s2 = connected_components(edges, driver_threshold=10**6)
-    assert s1.mode == "distributed" and s2.mode == "driver"
-    assert {tuple(r) for r in a1.collect()} == {tuple(r) for r in a2.collect()}
+    # the probe overflows, two rounds run, and 22 live edges hand off
+    a3, s3 = connected_components(edges, driver_threshold=100)
+    assert s1.mode == s3.mode == "distributed" and s2.mode == "driver"
+    assert 0 < s3.live_edges[-1] <= 100 < s3.live_edges[0]
+    want = {tuple(r) for r in a2.collect()}
+    assert {tuple(r) for r in a1.collect()} == want == {tuple(r) for r in a3.collect()}
 
 
 def _star_edges(spark, tmp_path, n):

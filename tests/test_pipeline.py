@@ -412,7 +412,7 @@ def _ids(df, col):
 
 
 _CC_FACTS = ("cc_mode", "cc_edges")
-_ANN_FACTS = ("rounds", "k_final", "n_distinct", "contractions")
+_ANN_FACTS = ("rounds", "k_final", "n_distinct", "contractions", "accepted")
 
 
 def _dedup_and_job(spark, mode, path, tmp_path):
